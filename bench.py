@@ -264,33 +264,24 @@ def main() -> None:
 
     host_cal, host_cal_shuffle = measure_anchors(spark)
 
-    # Pay the shared Lloyd centroid training ONCE, up front and timed
-    # (round-5 advice: the s12/s13/s14 headline numbers were dominated
-    # by whichever query happened to run first and fill the per-session
-    # codebook cache — bench ORDER decided who paid it). Reporting the
-    # training wall as its own line means the per-query numbers below
-    # measure query cost, deterministically, and the 2x gate can't be
-    # gamed or spooked by cache order.
-    from kafka2clickhouse_py_streamer_spark.llm.similarity import (
-        _base,
-        _train_centroids,
-    )
+    # Build the shared session substrates ONCE, up front (round-5
+    # advice: the s12/s13/s14 headline numbers were dominated by
+    # whichever query happened to run first and fill the per-session
+    # codebook — bench ORDER decided who paid it): the Lloyd centroids
+    # (s05/s11/s12/s13) and the s09 kNN graph (the edge index
+    # s24/s22/s10/s18 traverse; eager localCheckpoint, so it builds on
+    # call). Their build walls are reported as their own lines, so the
+    # per-query numbers below measure query cost, deterministically,
+    # and the 2x gate can't be gamed or spooked by cache order.
+    from kafka2clickhouse_py_streamer_spark.llm import similarity as sim
+    from kafka2clickhouse_py_streamer_spark.session import build_seconds
 
-    t0 = time.perf_counter()
-    _train_centroids(_base(spark, sf_dir), sf_dir)
-    train_sec = round(time.perf_counter() - t0, 3)
-
-    # Round 14: the session-scoped s09 kNN-graph substrate (the edge
-    # index s24/s22/s10/s18 traverse) is likewise built ONCE per
-    # session — pay it up front and report it as its own line, for
-    # the same reason training is: otherwise whichever graph consumer
-    # runs first absorbs the build and the per-query numbers depend
-    # on bench order.
-    from kafka2clickhouse_py_streamer_spark.llm.similarity import knn_graph
-
-    t0 = time.perf_counter()
-    knn_graph(spark, sf_dir)  # eager localCheckpoint: builds on call
-    knn_graph_sec = round(time.perf_counter() - t0, 3)
+    for build in (
+        lambda: sim._train_centroids(sim._base(spark, sf_dir), sf_dir),
+        lambda: sim.knn_graph(spark, sf_dir),
+    ):
+        build()
+    prebuilt = build_seconds()
 
     warm_queries(spark, registry, HEADLINE, sf_dir)
     times, spreads = time_queries(spark, registry, HEADLINE, sf_dir)
@@ -314,10 +305,14 @@ def main() -> None:
     except ValueError:
         sf_val = sf
     line, sidecar = format_output(
-        times, spreads, train_sec, sf_val, host_cal_sec=host_cal,
+        times, spreads, prebuilt["centroids"], sf_val, host_cal_sec=host_cal,
         host_cal_shuffle_sec=host_cal_shuffle,
-        knn_graph_sec=knn_graph_sec,
+        knn_graph_sec=prebuilt["knn_graph"],
     )
+    # every substrate build of the run (name -> build seconds): the
+    # prebuilt two plus those the queries paid (phash, m08/CC labels,
+    # plane counts, ...)
+    sidecar["substrates"] = build_seconds()
     if extra_times:
         sidecar["extra_queries"] = extra_times
         sidecar["extra_rep_spread"] = extra_spreads

@@ -34,6 +34,7 @@ from kafka2clickhouse_py_streamer_spark.functions import (
     valid_embeddings,
 )
 from kafka2clickhouse_py_streamer_spark.operators.base import Query, table
+from kafka2clickhouse_py_streamer_spark.session import substrate
 from kafka2clickhouse_py_streamer_spark.llm.similarity import (
     DIM as EMB_DIM,
 )
@@ -130,10 +131,10 @@ def _capped_shingles(
     ``s`` is the 60-bit `shingle_digest`, not the raw 3-word string —
     the d03 trick applied to the capped family (round 14): the DF-cap
     groupBy, the semi-join, and both pair-join sides key on an 8-byte
-    long instead of a ~25-byte string, and both capped consumers
-    materialize this frame, so the md5 is paid ONCE into checkpoint
-    blocks that are ~18% smaller to re-read. Measured at sf1 (cold
-    single-run REST receipts + interleaved A/B): shuffle write
+    long instead of a ~25-byte string, and each capped consumer
+    materializes its own copy, so the md5 is paid once per consumer,
+    into checkpoint blocks that are ~18% smaller to re-read. Measured
+    at sf1 (cold single-run REST receipts + interleaved A/B): shuffle write
     129.9 → 116.1 MB — only ~11%, NOT the naive 3× byte estimate,
     because lz4 already compresses the low-entropy shingle strings —
     d17 wall 7.66 → 6.19 s / 5.74 → 5.16 s (two sessions), d11 (with
@@ -992,21 +993,17 @@ ORDER BY doc_a, doc_b
 
 DEDUP_CC_MAX_ITERS = 20
 
-# Converged labels per (session, sf_dir): d08 consumes d07's output, and
-# recomputing the whole iterative loop (plus d06's band join feeding it)
-# for the policy step doubles the most expensive family's wall time. The
-# cached frame is already cut by connected_components'
-# iter_materialize, so reuse costs nothing
-# and the fixture paths are immutable. Keyed on id(session) so a new
-# session never sees another session's checkpoints.
-_CC_LABELS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# Converged labels per sf_dir, a ``"cc_labels"`` session substrate
+# (``session.substrate``): d08 consumes d07's output, and recomputing
+# the whole iterative loop (plus d06's band join feeding it) for the
+# policy step doubles the most expensive family's wall time. The frame
+# is already cut by connected_components' iter_materialize, so reuse
+# costs nothing, and the fixture paths are immutable. Keyed on the run's
+# applicationId, so a new context never sees another's checkpoints.
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _CC_LABELS_CACHE:
-        _CC_LABELS_CACHE[key] = _compute_cc_labels(spark, sf_dir)
-    return _CC_LABELS_CACHE[key]
+    return substrate(
+        spark, "cc_labels", sf_dir, lambda: _compute_cc_labels(spark, sf_dir)
+    )
 
 
 def d07_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

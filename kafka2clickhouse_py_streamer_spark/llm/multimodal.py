@@ -31,7 +31,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka2clickhouse_py_streamer_spark.functions.graph import (
+    connected_components,
+    iter_materialize,
+)
+from kafka2clickhouse_py_streamer_spark.llm.dedup import DEDUP_CC_MAX_ITERS
 from kafka2clickhouse_py_streamer_spark.operators.base import Query, spread, table
+from kafka2clickhouse_py_streamer_spark.session import substrate
 
 FRAME_SIZE = 4  # bytes per fake "frame" of the fake video payload
 N_SAMPLED_FRAMES = 3
@@ -603,22 +609,19 @@ PHASH_BAND_BITS = PHASH_BITS // PHASH_BANDS
 PHASH_BAND_SPACE = 2 ** PHASH_BAND_BITS  # band-value space (65,536)
 
 
-# The perceptual-hash SIGNATURE TABLE per (applicationId, sf_dir) —
-# the _CENTROID_CACHE / _CC_LABELS_CACHE pattern (round 14): m07 and
-# m08 both start from this frame, it is immutable for a session's
-# view of a directory, and it is already lineage-cut (eager
-# localCheckpoint), so per-call rebuilds bought nothing. A deployment
-# persists it as a table (it IS the media near-dup index).
-_PHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The perceptual-hash SIGNATURE TABLE per sf_dir is a ``"phash"``
+# session substrate (``session.substrate``): m07 and m08 both start
+# from this frame, it is immutable for a session's view of a
+# directory, and it is already lineage-cut (eager localCheckpoint), so
+# per-call rebuilds bought nothing. A deployment persists it as a
+# table (it IS the media near-dup index).
 def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, ph_hi, ph_lo): the 64-bit perceptual hash per media
     item, carried as two non-negative 32-bit halves — m07's first
     stage, factored out so the scale-receipt tool
     (tools/receipt_graphs.py) measures the exact production frame.
-    Served from the session-scoped ``_PHASH_CACHE`` (one build per
-    (applicationId, sf_dir)).
+    Served from the ``"phash"`` session substrate (one build per
+    session and sf_dir).
 
     Features are the 64 nibbles of sha256 over the payload hex —
     derived from the FULL payload bytes (so, unlike the earlier
@@ -654,9 +657,13 @@ def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     every other at Hamming 0, declaring them mutual duplicates. The
     NULL-payload -> NULL-metadata contract (m01-m05) means NULL media
     carries no content signal; it must not enter the pair graph."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PHASH_CACHE:
-        return _PHASH_CACHE[key]
+    return substrate(
+        spark, "phash", sf_dir, lambda: _build_phash(spark, sf_dir)
+    )
+
+
+def _build_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The uncached :func:`phash_hashes` build."""
     m = media_table(spark, sf_dir).where(F.col("payload").isNotNull())
     # ARRAY form of the 64-nibble feature stage (round 14): the
     # previous 64 named nib columns + a mean referencing all of them
@@ -705,19 +712,13 @@ def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
             " cast(0 as long)))"
         )
 
-    from kafka2clickhouse_py_streamer_spark.functions.graph import (
-        iter_materialize,
-    )
-
-    out = iter_materialize(
+    return iter_materialize(
         with_mean.select(
             "doc_id",
             threshold_word(half).alias("ph_hi"),
             threshold_word(0).alias("ph_lo"),
         )
     )
-    _PHASH_CACHE[key] = out
-    return out
 
 
 def phash_banded(hashed: DataFrame) -> DataFrame:
@@ -910,31 +911,18 @@ ORDER BY doc_a, doc_b
 """
 
 
-# Converged media CC labels per (applicationId, sf_dir) — the d07
-# _cc_labels pattern on the m07 pair graph. The cached frame is the
-# contraction output (nodes ⋈ parents over lineage-cut rounds), so
-# reuse re-runs only that cheap join, never the m07 chain.
-_M08_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Converged media CC labels per sf_dir, an ``"m08_labels"`` session
+# substrate — d07's ``_cc_labels`` on the m07 pair graph. The served
+# frame is the contraction output (nodes ⋈ parents over lineage-cut
+# rounds), so reuse re-runs only that cheap join, never the m07 chain.
 def _media_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _M08_LABELS_CACHE:
-        from kafka2clickhouse_py_streamer_spark.functions.graph import (
-            connected_components,
-        )
-        from kafka2clickhouse_py_streamer_spark.llm.dedup import (
-            DEDUP_CC_MAX_ITERS,
-        )
-
+    def build() -> DataFrame:
         edges = m07_phash_neardup(spark, sf_dir).select(
             F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
         )
-        labels, _rounds = connected_components(
-            edges, max_iters=DEDUP_CC_MAX_ITERS
-        )
-        _M08_LABELS_CACHE[key] = labels
-    return _M08_LABELS_CACHE[key]
+        return connected_components(edges, max_iters=DEDUP_CC_MAX_ITERS)[0]
+
+    return substrate(spark, "m08_labels", sf_dir, build)
 
 
 def m08_media_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -952,7 +940,7 @@ def m08_media_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop (never payloads); isolated media join back in ONE pass with
     their own id as label; the report is a single hash agg on the
     label. Round count is ~log(diameter) by star contraction. The
-    converged labels are session-cached (``_M08_LABELS_CACHE``, the
+    converged labels are the ``"m08_labels"`` session substrate (the
     d07 ``_cc_labels`` pattern, round 14): the contraction's input cut
     (connected_components' eager e0) re-ran the whole m07
     banding/verify chain once per CALL — ~1.3 s of the measured 4.0 s

@@ -27,7 +27,9 @@ from kafka2clickhouse_py_streamer_spark.functions import (
     valid_emb_sql,
     valid_embeddings,
 )
+from kafka2clickhouse_py_streamer_spark.functions.graph import iter_materialize
 from kafka2clickhouse_py_streamer_spark.operators.base import Query, table
+from kafka2clickhouse_py_streamer_spark.session import substrate
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 3
@@ -210,17 +212,6 @@ def _bucket_sql_expr(n_planes: int = N_PLANES) -> str:
     return "\n         + ".join(bits)
 
 
-# The derived plane count is a pure function of the raw embeddings
-# row count, which is immutable for a given sf_dir within a session —
-# so the COUNT job runs once per (applicationId, sf_dir) and the
-# integer is served from here afterwards (the _CENTROID_CACHE
-# pattern; round-12 verdict What's-wrong #4: s02/s03/s09/d15 each
-# paid a ~0.2-0.5 s COUNT job per *call*). applicationId, not a
-# Python id(), so a recycled session object can never serve a dead
-# context's count.
-_PLANES_CACHE: dict[tuple[str, str], int] = {}
-
-
 def derived_planes(spark: SparkSession, sf_dir: str) -> int:
     """Corpus-derived plane count: one COUNT() to the driver (the s10
     pattern — a scalar that becomes a plan constant), then
@@ -235,15 +226,14 @@ def derived_planes(spark: SparkSession, sf_dir: str) -> int:
     hurts linearity). Callers with a known corpus size pass an
     explicit ``n_planes`` instead and skip the count job.
 
-    Cached per (applicationId, sf_dir): the count is immutable for a
-    session's view of a directory, so consumers (s02/s03/s09/d15) pay
-    the COUNT job once per session, not once per query call."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PLANES_CACHE:
-        _PLANES_CACHE[key] = planes_for(
-            table(spark, sf_dir, "embeddings").count()
-        )
-    return _PLANES_CACHE[key]
+    A ``"planes"`` session substrate per sf_dir: the raw row count is
+    immutable for a session's view of a directory, so consumers
+    (s02/s03/s09/d15) pay the COUNT job once per session, not once per
+    query call (each used to pay ~0.2-0.5 s per call)."""
+    return substrate(
+        spark, "planes", sf_dir,
+        lambda: planes_for(table(spark, sf_dir, "embeddings").count()),
+    )
 
 
 def s02_lsh_buckets(
@@ -480,17 +470,6 @@ ORDER BY query_id, rk
 """
 
 
-# centroid training collects K×DIM doubles per (session, sf_dir) —
-# four operators (s05/s11/s12/s13) share identical trained codebooks,
-# so the collect runs once per session (the d07 label-cache pattern).
-# Keyed on the SparkContext applicationId (unique per JVM context,
-# never recycled) rather than Python id(): id() values can be reused
-# after a session is garbage-collected, which could silently serve a
-# dead session's codebooks (round-4 advice).
-_CENTROID_CACHE: dict[
-    tuple[str, str, int, str], dict[int, list[float]]
-] = {}
-
 # Lloyd refinement rounds after the deterministic mod-K seeding. Each
 # round is one corpus scan (argmin-L2 assignment against broadcast
 # literal centroids) + one K-group hash agg + a K×DIM driver collect —
@@ -566,20 +545,18 @@ def _train_centroids(
     rounds (`_lloyd_round`) — real assign→re-center k-means expressed
     as broadcast-assignment + hash-agg dataflow, oracle-twinned by
     `_train_cte_sql`. Returns the K×DIM doubles (driver-side: K×64
-    values, broadcast as literals). Cached per (applicationId, sf_dir,
-    iters, tag) when sf_dir is given — the four consumers train
-    identical codebooks once per session. ``extra`` restricts the
-    training set to a Column predicate (s20 trains on the indexed
-    snapshot half only); callers passing ``extra`` MUST pass a
-    distinct ``tag`` so subset-trained centroids never alias the
-    full-corpus cache entry."""
-    key = (
-        (base.sparkSession.sparkContext.applicationId, sf_dir, iters, tag)
-        if sf_dir
-        else None
-    )
-    if key is not None and key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
+    values, broadcast as literals). A ``"centroids"`` session substrate
+    per (sf_dir, iters, tag) when sf_dir is given — the four consumers
+    (s05/s11/s12/s13) train identical codebooks once per session.
+    ``extra`` restricts the training set to a Column predicate (s20
+    trains on the indexed snapshot half only); callers passing
+    ``extra`` MUST pass a distinct ``tag`` so subset-trained centroids
+    never alias the full-corpus entry."""
+    if sf_dir:
+        return substrate(
+            base.sparkSession, "centroids", (sf_dir, iters, tag),
+            lambda: _train_centroids(base, iters=iters, extra=extra),
+        )
     corpus = base.filter(F.col("vec_id") >= N_QUERIES)
     if extra is not None:
         corpus = corpus.filter(extra)
@@ -610,8 +587,6 @@ def _train_centroids(
         if not cents:
             break
         cents = _lloyd_round(corpus, cents)
-    if key is not None:
-        _CENTROID_CACHE[key] = cents
     return cents
 
 
@@ -1097,37 +1072,28 @@ ORDER BY e.query_id
 K_GRAPH = 3
 
 
-# The converged kNN-graph edge frame per (applicationId, sf_dir) at the
-# corpus-DERIVED plane count — the substrate under the whole graph
-# family: s09 publishes it, s10 (pagerank), s18 (label eval), s22
-# (k-hop) and s24 (triangles) all traverse it. Round-13 measurement:
-# each consumer re-ran the bucket self-join + cosine + top-k window
-# per CALL (s24's remaining 1.84 s at sf0.1 was entirely s09), so the
-# graph is now built ONCE per session and served cut — the
-# _CC_LABELS_CACHE / _CENTROID_CACHE pattern (a deployment persists
-# the kNN index as a table; rebuilding it per traversal query is not
-# the 100 TB shape). The cached frame is lineage-cut by
-# iter_materialize (localCheckpoint locally, reliable checkpoint on
-# clusters), so reuse costs nothing; keyed on applicationId (never a
-# recycled Python id) and only for the derived-plane layout —
-# explicit ``n_planes`` callers (the sf1 occupancy probe) always
-# compute fresh.
-_KNN_GRAPH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The converged kNN-graph edge frame per sf_dir at the corpus-DERIVED
+# plane count — the substrate under the whole graph family: s09
+# publishes it, s10 (pagerank), s18 (label eval), s22 (k-hop) and s24
+# (triangles) all traverse it. Round-13 measurement: each consumer
+# re-ran the bucket self-join + cosine + top-k window per CALL (s24's
+# remaining 1.84 s at sf0.1 was entirely s09), so the graph is a
+# ``"knn_graph"`` session substrate (``session.substrate``), built ONCE
+# per session and served cut (a deployment persists the kNN index as a
+# table; rebuilding it per traversal query is not the 100 TB shape).
+# The frame is lineage-cut by iter_materialize (localCheckpoint
+# locally, reliable checkpoint on clusters), so reuse costs nothing.
+# Only the derived-plane layout is a substrate — explicit ``n_planes``
+# callers (the sf1 occupancy probe) always compute fresh.
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped s09 edge frame ``(src_id, nbr_id, cosine, rk)``
     (unordered; rk ≤ K_GRAPH per src) at the derived plane count."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KNN_GRAPH_CACHE:
-        from kafka2clickhouse_py_streamer_spark.functions.graph import (
-            iter_materialize,
-        )
-
-        _KNN_GRAPH_CACHE[key] = iter_materialize(
+    return substrate(
+        spark, "knn_graph", sf_dir,
+        lambda: iter_materialize(
             _knn_graph_frame(spark, sf_dir, derived_planes(spark, sf_dir))
-        )
-    return _KNN_GRAPH_CACHE[key]
+        ),
+    )
 
 
 def s09_knn_graph(
@@ -3240,10 +3206,6 @@ def s22_khop_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list now comes from the session-scoped :func:`knn_graph`
     substrate (already lineage-cut), so even the one-time build is
     shared with s10/s18/s24."""
-    from kafka2clickhouse_py_streamer_spark.functions.graph import (
-        iter_materialize,
-    )
-
     edges = knn_graph(spark, sf_dir).select("src_id", "nbr_id")
     seeds = _base(spark, sf_dir).filter(
         F.col("vec_id") % S22_SEED_MOD == 0
@@ -3632,10 +3594,6 @@ def s24_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # make (iter_materialize: localCheckpoint locally, reliable
     # checkpoint on a cluster). Plan after: 10 scans / 17 exchanges,
     # wall 2.39 s → 0.66 s at sf0.1.
-    from kafka2clickhouse_py_streamer_spark.functions.graph import (
-        iter_materialize,
-    )
-
     edges = iter_materialize(edges)
     return triangle_stats(edges)
 

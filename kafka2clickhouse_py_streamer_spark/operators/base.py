@@ -134,58 +134,7 @@ def spread(df: DataFrame) -> DataFrame:
 # asserts the committed list matches the tool and that no query's
 # evidence can age out of the driver window unseen.
 _VERIFY_FIRST = [
-    # green-r10 but file churned since
-    "d12_span_dedup",
-    "d13_quality_canonical",
-    "d14_lsh_admission",
-    "p03_sequence_packing",
-    "p08_flatten_mix",
-    "p09_incremental_refresh",
-    "w13_histogram_quantiles",
-    "t19_heaps_fit",
-    "t20_gopher_funnel",
-    "w14_decayed_rate",
-    "w15_hll_distinct",
-    "t21_tfidf_keywords",
-    "t22_langid_eval",
-    "t23_pmi_collocations",
-    "w16_profile_sketch",
-    "t10_char_entropy",
-    "p10_budget_select",
-    "p11_curriculum_stages",
-    "p12_temperature_mix",
-    "p13_pps_sample",
-    "q01_pricing_summary",
-    "q06_revenue_filter",
-    "q12_distinct_agg",
-    "q13_rollup",
-    "q41_map_fns",
-    "q64_weighted_quantiles",
-    "q65_running_distinct",
-    "q66_table_profile",
-    "q67_sequence_match",
-    "q68_interval_coverage",
-    "q27_approx_stats",
-    "q14_cube",
-    "q23_grouping_sets",
-    "q24_having",
-    "q28_sessionization",
-    "q08_topk_per_group",
-    "q09_running_sum",
-    "q10_lag_lead",
-    "q29_keep_first",
     # green-r11 but file churned since
-    "s08_ann_recall",
-    "s09_knn_graph",
-    "s10_pagerank",
-    "d15_semdedup",
-    "s11_cluster_quality",
-    "d16_span_scrub",
-    "d01_exact_dedup",
-    "d02_ngram_jaccard",
-    "d03_minhash_lsh",
-    "d04_simhash",
-    "d05_embedding_neardup",
     "d06_simhash_pairs",
     "m06_multimodal_packing",
     "w05_attribution",
@@ -327,6 +276,57 @@ _VERIFY_FIRST = [
     "w03_session_window",
     "w04_enriched_windows",
     "q63_forward_asof",
+    # green-r14 but file churned since
+    "d12_span_dedup",
+    "d13_quality_canonical",
+    "d14_lsh_admission",
+    "s08_ann_recall",
+    "s09_knn_graph",
+    "s10_pagerank",
+    "d15_semdedup",
+    "s11_cluster_quality",
+    "d16_span_scrub",
+    "d01_exact_dedup",
+    "d02_ngram_jaccard",
+    "d03_minhash_lsh",
+    "d04_simhash",
+    "d05_embedding_neardup",
+    "p03_sequence_packing",
+    "p08_flatten_mix",
+    "p09_incremental_refresh",
+    "w13_histogram_quantiles",
+    "t19_heaps_fit",
+    "t20_gopher_funnel",
+    "w14_decayed_rate",
+    "w15_hll_distinct",
+    "t21_tfidf_keywords",
+    "t22_langid_eval",
+    "t23_pmi_collocations",
+    "w16_profile_sketch",
+    "t10_char_entropy",
+    "p10_budget_select",
+    "p11_curriculum_stages",
+    "p12_temperature_mix",
+    "p13_pps_sample",
+    "q01_pricing_summary",
+    "q06_revenue_filter",
+    "q12_distinct_agg",
+    "q13_rollup",
+    "q41_map_fns",
+    "q64_weighted_quantiles",
+    "q65_running_distinct",
+    "q66_table_profile",
+    "q67_sequence_match",
+    "q68_interval_coverage",
+    "q27_approx_stats",
+    "q14_cube",
+    "q23_grouping_sets",
+    "q24_having",
+    "q28_sessionization",
+    "q08_topk_per_group",
+    "q09_running_sum",
+    "q10_lag_lead",
+    "q29_keep_first",
 ]
 
 

@@ -58,6 +58,7 @@ from pyspark.sql.types import (
 )
 
 from kafka2clickhouse_py_streamer_spark.schema.model import ColumnMeta, TableSchema
+from kafka2clickhouse_py_streamer_spark.session import substrate
 
 # Marker distinguishing "drop silently" (reference main.py:516-520) from
 # "route to DLQ with an error" inside the single validation UDF.
@@ -261,24 +262,17 @@ def _schema_fingerprint(schema: TableSchema) -> tuple:
     )
 
 
-# (applicationId, fingerprint) -> pandas-UDF callable. The streaming
-# shell calls tag_errors once per TRIGGER; without this cache every
-# micro-batch re-pickles the validator closure and registers a fresh
-# JVM UDF — pure driver-side fixed cost at high trigger rates
-# (THROUGHPUT_r08's parity_1p regime). applicationId scopes the cache
-# to one SparkContext so a restarted session can't see stale JVM refs.
-_VALIDATOR_UDF_CACHE: dict[tuple, object] = {}
-
-
+# The pandas-UDF validator per schema fingerprint is a "validator_udf"
+# session substrate. The streaming shell calls tag_errors once per
+# TRIGGER; without it every micro-batch re-pickles the validator closure
+# and registers a fresh JVM UDF — pure driver-side fixed cost at high
+# trigger rates (THROUGHPUT_r08's parity_1p regime). The registry's
+# applicationId scoping means a restarted session can't see stale JVM
+# refs.
 def _tag_errors_pandas(
     raw_df: DataFrame, schema: TableSchema, value_col: str
 ) -> DataFrame:
-    key = (
-        raw_df.sparkSession.sparkContext.applicationId,
-        _schema_fingerprint(schema),
-    )
-    _validate = _VALIDATOR_UDF_CACHE.get(key)
-    if _validate is None:
+    def build():
         validate_row = _make_validator(
             {c.name: c.json_type for c in schema.columns},
             list(schema.required),
@@ -289,10 +283,12 @@ def _tag_errors_pandas(
         def _validate(vals: pd.Series) -> pd.Series:
             return vals.map(validate_row)
 
-        if len(_VALIDATOR_UDF_CACHE) > 64:  # bound: schemas are few
-            _VALIDATOR_UDF_CACHE.clear()
-        _VALIDATOR_UDF_CACHE[key] = _validate
+        return _validate
 
+    _validate = substrate(
+        raw_df.sparkSession, "validator_udf", _schema_fingerprint(schema),
+        build,
+    )
     return raw_df.withColumn("_err", _validate(F.col(value_col)))
 
 
@@ -433,13 +429,6 @@ def cast_project(parsed_df: DataFrame, schema: TableSchema) -> DataFrame:
     )
 
 
-# (applicationId, fingerprint, value_col) -> (from_json Column, cast
-# Columns). Column objects are unresolved expression trees — reusable
-# across DataFrames — but building them crosses py4j dozens of times;
-# the streaming shell would otherwise pay that per trigger.
-_PLAN_FRAG_CACHE: dict[tuple, tuple] = {}
-
-
 def receiving_transform(spark, schema: TableSchema, value_col: str) -> tuple:
     """Cached (parse Column, cast Columns) for the receiving-schema
     pipeline shape (every sink column present, received as STRING).
@@ -448,14 +437,14 @@ def receiving_transform(spark, schema: TableSchema, value_col: str) -> tuple:
     (each op is an EAGER analysis pass in Spark; the streaming shell
     pays this per trigger, so the fused form is also the cheap form).
     The cast Columns read their input through ``_parsed.<name>`` field
-    refs so the struct is expanded and cast in one projection."""
-    key = (
-        spark.sparkContext.applicationId,
-        _schema_fingerprint(schema),
-        value_col,
-    )
-    frag = _PLAN_FRAG_CACHE.get(key)
-    if frag is None:
+    refs so the struct is expanded and cast in one projection.
+
+    A "plan_frag" session substrate per (fingerprint, value_col):
+    Column objects are unresolved expression trees — reusable across
+    DataFrames — but building them crosses py4j dozens of times; the
+    streaming shell would otherwise pay that per trigger."""
+
+    def build() -> tuple:
         parse = F.from_json(F.col(value_col), receiving_schema(schema))
         casts = [
             _cast_expr(
@@ -466,10 +455,11 @@ def receiving_transform(spark, schema: TableSchema, value_col: str) -> tuple:
             )
             for c in schema.columns
         ]
-        if len(_PLAN_FRAG_CACHE) > 64:  # bound: schemas are few
-            _PLAN_FRAG_CACHE.clear()
-        _PLAN_FRAG_CACHE[key] = frag = (parse, casts)
-    return frag
+        return parse, casts
+
+    return substrate(
+        spark, "plan_frag", (_schema_fingerprint(schema), value_col), build
+    )
 
 
 def process_batch(

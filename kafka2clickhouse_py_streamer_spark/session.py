@@ -11,11 +11,16 @@ the right default on a large cluster:
   path).
 - Shuffle partitions default to cores locally; on a real cluster AQE's
   coalescing makes the initial number far less critical.
+
+It also holds the one registry of *session substrates* (:func:`substrate`):
+engine-built state that is immutable for one run's view of its inputs.
 """
 
 from __future__ import annotations
 
 import os
+import time
+from collections.abc import Callable, Hashable
 
 from pyspark.sql import SparkSession
 
@@ -99,3 +104,60 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Session substrates: state the engine builds once per run and then
+# serves — trained codebooks, the kNN graph, CC labels, validator UDFs,
+# plan fragments. All of it belongs to ONE run identity, the
+# SparkContext applicationId (unique per context, never recycled, unlike
+# a Python id()): a restarted context must never read a dead context's
+# checkpoints or JVM refs. Only one SparkContext lives per process, so
+# the registry holds one application's entries at a time. No lock: each
+# dict operation is atomic under the GIL, so two threads missing the
+# same key at once (concurrent streaming triggers) at worst both build,
+# and the later insert wins.
+SUBSTRATE_CAP = 64  # entries per name; cleared on overflow (keys are few)
+_MISS = object()
+_app_id: str | None = None
+_entries: dict[tuple[str, Hashable], object] = {}
+_build_s: dict[str, float] = {}
+
+
+def substrate(
+    spark: SparkSession, name: str, key: Hashable, build: Callable[[], object]
+):
+    """``build()``, run once per (applicationId, ``name``, ``key``) and
+    served from the registry afterwards — a hit costs one dict lookup.
+    A call under a new applicationId first drops every entry of the old
+    one. Each miss adds its build wall time to ``build_seconds()[name]``
+    (a build that calls other substrates includes their misses)."""
+    global _app_id
+    app = spark.sparkContext.applicationId
+    if app != _app_id:
+        _entries.clear()
+        _build_s.clear()
+        _app_id = app
+    value = _entries.get((name, key), _MISS)
+    if value is _MISS:
+        t0 = time.perf_counter()
+        value = build()
+        _build_s[name] = _build_s.get(name, 0.0) + time.perf_counter() - t0
+        same = [k for k in _entries if k[0] == name]
+        if len(same) > SUBSTRATE_CAP:
+            for k in same:
+                _entries.pop(k, None)
+        _entries[(name, key)] = value
+    return value
+
+
+def build_seconds() -> dict[str, float]:
+    """Total build wall seconds (ms-rounded) per substrate name for the
+    current run."""
+    return {name: round(s, 3) for name, s in _build_s.items()}
+
+
+def release(spark: SparkSession) -> None:
+    """Drop every substrate (and its build time) of ``spark``'s run."""
+    if spark.sparkContext.applicationId == _app_id:
+        _entries.clear()
+        _build_s.clear()

@@ -709,6 +709,7 @@ def test_capped_family_digest_key_matches_raw_strings(spark, adv_dir):
     from pyspark.sql import functions as F
 
     from kafka2clickhouse_py_streamer_spark.llm.dedup import (
+        CONTAINMENT_THRESHOLD,
         MAX_SHINGLE_DF,
         _jaccard_pairs,
         _shingle_rows,
@@ -732,56 +733,56 @@ def test_capped_family_digest_key_matches_raw_strings(spark, adv_dir):
             tuple(r) for r in d11_ngram_jaccard_capped(spark, d).collect()
         ]
         assert got_d11 == ref_d11
-    got_d17 = [tuple(r) for r in d17_containment_pairs(spark, SRC).collect()]
-    # raw-string d17 reference: containment tail over the raw capped frame
-    sh = raw_capped(SRC)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    inter = (
-        a.join(
-            b,
-            (F.col("s_b") == F.col("s_a")) & (F.col("doc_b") > F.col("doc_a")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    from kafka2clickhouse_py_streamer_spark.llm.dedup import (
-        CONTAINMENT_THRESHOLD,
-    )
-
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    sized = inter.join(sa, F.col("doc_a") == F.col("sa.doc_id")).join(
-        sb, F.col("doc_b") == F.col("sb.doc_id")
-    )
-    both = sized.select(
-        "n_common",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("contained"),
-                    F.col("doc_b").alias("container"),
-                    F.col("sa.n").alias("n_contained"),
-                ),
-                F.struct(
-                    F.col("doc_b").alias("contained"),
-                    F.col("doc_a").alias("container"),
-                    F.col("sb.n").alias("n_contained"),
-                ),
+        got_d17 = [
+            tuple(r) for r in d17_containment_pairs(spark, d).collect()
+        ]
+        # raw-string d17 reference: containment tail over the raw capped
+        # frame
+        sh = raw_capped(d)
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        a = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
+        b = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
+        inter = (
+            a.join(
+                b,
+                (F.col("s_b") == F.col("s_a"))
+                & (F.col("doc_b") > F.col("doc_a")),
             )
-        ).alias("p"),
-    ).select("p.contained", "p.container", "p.n_contained", "n_common")
-    raw = F.col("n_common") / F.col("n_contained")
-    ref_d17 = [
-        tuple(r)
-        for r in both.filter(raw >= CONTAINMENT_THRESHOLD)
-        .select(
-            "contained",
-            "container",
-            F.col("n_common").cast("long").alias("n_common"),
-            F.round(raw, 6).alias("containment"),
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-        .orderBy("contained", "container")
-        .collect()
-    ]
-    assert got_d17 == ref_d17
+        sa, sb = sizes.alias("sa"), sizes.alias("sb")
+        sized = inter.join(sa, F.col("doc_a") == F.col("sa.doc_id")).join(
+            sb, F.col("doc_b") == F.col("sb.doc_id")
+        )
+        both = sized.select(
+            "n_common",
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("doc_a").alias("contained"),
+                        F.col("doc_b").alias("container"),
+                        F.col("sa.n").alias("n_contained"),
+                    ),
+                    F.struct(
+                        F.col("doc_b").alias("contained"),
+                        F.col("doc_a").alias("container"),
+                        F.col("sb.n").alias("n_contained"),
+                    ),
+                )
+            ).alias("p"),
+        ).select("p.contained", "p.container", "p.n_contained", "n_common")
+        raw = F.col("n_common") / F.col("n_contained")
+        ref_d17 = [
+            tuple(r)
+            for r in both.filter(raw >= CONTAINMENT_THRESHOLD)
+            .select(
+                "contained",
+                "container",
+                F.col("n_common").cast("long").alias("n_common"),
+                F.round(raw, 6).alias("containment"),
+            )
+            .orderBy("contained", "container")
+            .collect()
+        ]
+        assert got_d17 == ref_d17

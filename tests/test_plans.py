@@ -2010,11 +2010,12 @@ def test_s09_plane_count_is_scale_derived(spark, sf_dir):
 def test_derived_planes_counts_once_per_session_dir(spark, sf_dir):
     """r12 verdict What's-wrong #4: derived_planes launched its COUNT
     job on EVERY call, so s02/s03/s09/d15 each paid ~0.2-0.5 s per
-    invocation. It is now cached per (applicationId, sf_dir) — the
-    _CENTROID_CACHE pattern. Pin: one table() lookup (i.e. one COUNT
+    invocation. It is now a "planes" session substrate per sf_dir
+    (``session.substrate``). Pin: one table() lookup (i.e. one COUNT
     job) per (session, sf_dir); a second sf_dir pays its own count;
-    repeat calls on either are served from the cache."""
+    repeat calls on either are served from the registry."""
     from kafka2clickhouse_py_streamer_spark.llm import similarity as sim
+    from kafka2clickhouse_py_streamer_spark.session import release
 
     calls = []
     real_table = sim.table
@@ -2023,8 +2024,7 @@ def test_derived_planes_counts_once_per_session_dir(spark, sf_dir):
         calls.append((d, name))
         return real_table(sp, d, name)
 
-    saved_cache = dict(sim._PLANES_CACHE)
-    sim._PLANES_CACHE.clear()
+    release(spark)
     sim.table = counting_table
     try:
         p1 = sim.derived_planes(spark, sf_dir)
@@ -2038,5 +2038,3 @@ def test_derived_planes_counts_once_per_session_dir(spark, sf_dir):
         assert len(calls) == 2, calls
     finally:
         sim.table = real_table
-        sim._PLANES_CACHE.clear()
-        sim._PLANES_CACHE.update(saved_cache)
