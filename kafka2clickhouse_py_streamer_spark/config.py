@@ -66,7 +66,7 @@ class JobConfig:
     max_offsets_per_trigger: int = 25_000  # NUM_MESSAGES (main.py:569)
     # source-side fan-out: split each trigger's offset ranges into at
     # least this many tasks (0 = Spark's 1:1 topic-partition mapping);
-    # the shuffle-free sibling of SPARK_GRAFT_BATCH_PARTS
+    # the shuffle-free sibling of PipelineJob's automatic fan-out
     kafka_min_partitions: int = 0
     checkpoint_dir: str = "/tmp/pipeline-checkpoint"
     required_columns: list[str] = field(default_factory=list)

@@ -18,31 +18,16 @@ Spark-first — no code is translated):
   (main.py:302).
 
 Architecture: P1+P2 need per-field JSON *type* checking — "is 5 vs
-'5'" — i.e. the raw token's JSON class. Two implementations
-(``SPARK_GRAFT_VALIDATOR``):
-
-- ``pandas`` (default): ONE Arrow-batched pandas UDF per batch over
-  the raw value — the sanctioned Python path. At 100 TB the cost is
-  one Arrow round-trip per input row; everything downstream is JVM.
-- ``jvm`` (opt-in, NEGATIVE RESULT for now): Spark 4's VariantType
-  exposes exactly the token class (``try_parse_json`` →
-  ``variant_get`` + ``schema_of_variant``) and the semantics are
-  proven equal to the pandas form (differential + parser-edge tests,
-  RFC-strictness notes on ``_tag_errors_jvm``), but the measured cost
-  is ~30x the pandas UDF at 1M rows (46 s vs 1.4-3.3 s; a layered
-  one-eval-per-field variant was ~100x) — variant expression
-  evaluation dominates regardless of how few variant ops the plan
-  holds. Kept as the semantics reference and for re-testing on later
-  Spark versions; do not default to it until that inverts.
+'5'" — i.e. the raw token's JSON class. That is ONE Arrow-batched
+pandas UDF per batch over the raw value; everything downstream is JVM.
+(A VariantType CASE-expression validator was tried and removed: same
+verdicts, ~3x slower — SCALE.md, "VariantType validator: negative
+result".)
 
 P3 is pure Column expressions — whole-stage-codegen, no Python.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import re
 
 import pandas as pd
 
@@ -50,11 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DateType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from kafka2clickhouse_py_streamer_spark.schema.model import ColumnMeta, TableSchema
@@ -135,118 +118,6 @@ def _make_validator(cols: dict[str, str], required: list[str], drop: str):
     return validate_row
 
 
-# JSON class tests over a schema_of_variant() string. Mirrors
-# _make_validator: booleans are BOOLEAN (never integer/number). The
-# integer class needs care because Variant NORMALIZES decimal tokens —
-# "1.0" parses to DECIMAL(1,0), same kind as an int64-overflow integer
-# token ("99999999999999999999" → DECIMAL(20,0)). Python's json gives
-# float for the former (NOT integer) and unbounded int for the latter
-# (integer), so only DECIMAL(p,0) with p ≥ 19 — a precision no in-range
-# int64 token produces — counts as integer. Documented divergences,
-# both beyond any schema here: a ≥19-digit "N.0"-style decimal token
-# classes as integer, and an integer token past 38 digits falls to
-# DOUBLE and is flagged.
-_BIG_INT_DECIMALS = ", ".join(f"'DECIMAL({p},0)'" for p in range(19, 39))
-
-_JSON_CLASS_TEST = {
-    "integer": lambda st: (
-        f"({st} = 'BIGINT' OR {st} IN ({_BIG_INT_DECIMALS}))"
-    ),
-    "number": lambda st: (
-        f"({st} = 'BIGINT' OR {st} = 'DOUBLE' OR {st} LIKE 'DECIMAL%')"
-    ),
-    "enum": lambda st: (
-        f"({st} = 'BIGINT' OR {st} = 'STRING' "
-        f"OR {st} IN ({_BIG_INT_DECIMALS}))"
-    ),
-    "string": lambda st: f"({st} = 'STRING')",
-}
-
-_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _jvm_error_case(cols: dict[str, str], required: list[str]) -> str:
-    """The validator as ONE SQL CASE over a pre-parsed variant column
-    ``_v`` (emitted as SQL text, not stacked Columns — one parse).
-    First failing check wins, in _make_validator's exact order:
-    required keys first, then per-column class checks. Key-presence
-    semantics proven against VariantType: an ABSENT key makes
-    ``variant_get`` SQL-null, while a present JSON null yields a
-    non-null variant with ``is_variant_null`` = true (valid here — P3
-    fills the sentinel)."""
-
-    def q(s: str) -> str:
-        return s.replace("'", "''")
-
-    whens = []
-    for req in required:
-        whens.append(
-            f"WHEN variant_get(_v, '$.{req}') IS NULL "
-            f"THEN 'data must contain [''{q(req)}''] properties'"
-        )
-    for name, jtype in cols.items():
-        g = f"variant_get(_v, '$.{name}')"
-        class_ok = _JSON_CLASS_TEST[jtype](f"schema_of_variant({g})")
-        whens.append(
-            f"WHEN {g} IS NOT NULL AND NOT is_variant_null({g}) "
-            f"AND NOT {class_ok} "
-            f"THEN 'data.{q(name)} must be "
-            f"{'string or integer' if jtype == 'enum' else q(jtype)}'"
-        )
-    return "CASE " + " ".join(whens) + " ELSE NULL END"
-
-
-def _tag_errors_jvm(
-    raw_df: DataFrame, schema: TableSchema, value_col: str
-) -> DataFrame:
-    """STRICTNESS: Jackson-based JVM parsers accept trailing garbage
-    ('{"a":1}{junk' parses as the first object), which Python's
-    json.loads rejects — so the message is parsed WRAPPED as
-    ``[value]``: trailing content breaks the array parse, a clean JSON
-    value yields exactly one element, and the object itself is
-    ``$[0]`` of the same single parse. Two RFC 8259 strictness
-    divergences vs the pandas mode (whose json.loads is lenient beyond
-    the RFC): duplicate-key objects and NaN/Infinity number literals
-    are DROPPED here, tolerated there (last-key-wins / float('nan')).
-    Both are invalid JSON per the RFC; pick the pandas mode to ingest
-    producers that emit them."""
-    case_sql = _jvm_error_case(
-        {c.name: c.json_type for c in schema.columns},
-        list(schema.required),
-    )
-    vcol = F.col(value_col)
-    err = (
-        F.when(vcol.isNull() | (F.trim(vcol) == ""), F.lit(_DROP))
-        .when(
-            F.col("_w").isNull()
-            | F.expr("variant_get(_w, '$[1]') IS NOT NULL"),
-            F.lit(_DROP),
-        )
-        .when(
-            # _v SQL-null = the wrapped array is EMPTY: a whitespace-
-            # only message beyond plain spaces ("\t\n" — Spark's trim
-            # only strips 0x20, so the first when missed it) wraps to
-            # '[\t\n]', a valid zero-element array. Same tombstone.
-            F.col("_v").isNull()
-            | F.expr("is_variant_null(_v)")
-            | ~F.expr("schema_of_variant(_v) LIKE 'OBJECT%'"),
-            F.lit(_DROP),
-        )
-        .otherwise(F.expr(case_sql))
-    )
-    return (
-        raw_df.withColumn(
-            "_w",
-            F.expr(
-                f"try_parse_json(concat('[', {value_col}, ']'))"
-            ),
-        )
-        .withColumn("_v", F.expr("variant_get(_w, '$[0]')"))
-        .withColumn("_err", err)
-        .drop("_w", "_v")
-    )
-
-
 def _schema_fingerprint(schema: TableSchema) -> tuple:
     """Value-identity key for per-schema plan caches: two TableSchema
     objects with the same columns/required produce identical plan
@@ -262,16 +133,22 @@ def _schema_fingerprint(schema: TableSchema) -> tuple:
     )
 
 
-# The pandas-UDF validator per schema fingerprint is a "validator_udf"
-# session substrate. The streaming shell calls tag_errors once per
-# TRIGGER; without it every micro-batch re-pickles the validator closure
-# and registers a fresh JVM UDF — pure driver-side fixed cost at high
-# trigger rates (THROUGHPUT_r08's parity_1p regime). The registry's
-# applicationId scoping means a restarted session can't see stale JVM
-# refs.
-def _tag_errors_pandas(
-    raw_df: DataFrame, schema: TableSchema, value_col: str
+def tag_errors(
+    raw_df: DataFrame, schema: TableSchema, value_col: str = "value"
 ) -> DataFrame:
+    """P1+P2 tagging stage: adds an ``_err`` column (NULL = valid, the
+    drop marker, or the validation error) from ONE Arrow-batched pandas
+    UDF. Callers that consume both splits more than once should persist
+    this frame so the UDF runs once per batch.
+
+    The UDF per schema fingerprint is a "validator_udf" session
+    substrate. The streaming shell calls tag_errors once per TRIGGER;
+    without it every micro-batch re-pickles the validator closure and
+    registers a fresh JVM UDF — pure driver-side fixed cost at high
+    trigger rates (THROUGHPUT_r08's parity_1p regime). The registry's
+    applicationId scoping means a restarted session can't see stale
+    JVM refs."""
+
     def build():
         validate_row = _make_validator(
             {c.name: c.json_type for c in schema.columns},
@@ -290,35 +167,6 @@ def _tag_errors_pandas(
         build,
     )
     return raw_df.withColumn("_err", _validate(F.col(value_col)))
-
-
-def tag_errors(
-    raw_df: DataFrame, schema: TableSchema, value_col: str = "value"
-) -> DataFrame:
-    """P1+P2 tagging stage: adds an ``_err`` column (NULL = valid, the
-    drop marker, or the validation error).
-
-    ``SPARK_GRAFT_VALIDATOR`` picks the implementation: ``pandas``
-    (default — the Arrow-batched UDF; callers that consume both splits
-    more than once should persist this frame so the UDF runs once per
-    batch) or ``jvm`` (the VariantType CASE expression — semantics
-    twin-tested equal, but a measured ~30x SLOWDOWN on current Spark,
-    see the module docstring; opt-in only). A sink column name that is
-    not a plain identifier (can't be embedded in a JSON path literal)
-    falls back to the pandas form automatically."""
-    mode = os.environ.get("SPARK_GRAFT_VALIDATOR", "pandas")
-    # guard BOTH name sources the CASE text interpolates raw: column
-    # names (JSON path + error message) and the configured required
-    # keys (REQUIRED_COLUMNS env — a quote/dot/$ would make an invalid
-    # path literal or wrong error string, not a clean fallback)
-    if mode == "jvm" and all(
-        _IDENT.match(n)
-        for n in [*(c.name for c in schema.columns), *schema.required]
-    ):
-        return _tag_errors_jvm(raw_df, schema, value_col)
-    if mode not in ("jvm", "pandas"):  # pragma: no cover - config error
-        raise ValueError(f"unknown validator mode: {mode!r}")
-    return _tag_errors_pandas(raw_df, schema, value_col)
 
 
 def dlq_condition():

@@ -37,9 +37,9 @@ def kafka_stream(
     (the reference's single consumer reads one partition) otherwise
     pins validate/cast to as many cores as the topic has partitions;
     with ``minPartitions`` the split happens at the broker fetch, no
-    local shuffle needed, and ``PipelineJob``'s shuffle fan-out
-    (``SPARK_GRAFT_BATCH_PARTS``) sees a wide-enough batch and becomes
-    a no-op. Defaults to None (Spark's 1:1 partition mapping)."""
+    local shuffle needed, and ``PipelineJob``'s automatic shuffle
+    fan-out (to min(defaultParallelism, 8) partitions) sees a
+    wide-enough batch and becomes a no-op. Defaults to None (Spark's 1:1 partition mapping)."""
     reader = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

@@ -49,6 +49,12 @@ from kafka2clickhouse_py_streamer_spark.schema.model import TableSchema
 # drift-retry) so the collapse behavior cannot drift between them.
 DLQ_SINGLE_TASK_MAX_ROWS = 500_000
 
+# Session conf keys PipelineJob.start turns off for its own query only.
+_INGEST_CONF_OFF = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.inMemoryColumnarStorage.compressed",
+)
+
 
 class SchemaProvider(Protocol):
     """Fetches the sink table's schema (the reference's DESCRIBE TABLE,
@@ -77,10 +83,14 @@ class PipelineJob:
         self._dlq_sink = dlq_sink
         self._value_col = value_col
         self._schema: TableSchema | None = None  # driver-side cache
-        # lazily-created single worker reused across triggers for the
-        # overlapped DLQ write (see _run_overlapped); lives as long as
-        # the job object
-        self._dlq_pool: ThreadPoolExecutor | None = None
+        # ONE worker reused across triggers for the valid-plan build
+        # and the overlapped DLQ write (see _run_overlapped): a fresh
+        # Thread per trigger would churn a py4j connection per batch in
+        # a long-running service. No thread starts until the first
+        # submit.
+        self._dlq_pool = ThreadPoolExecutor(
+            max_workers=1, thread_name_prefix="dlq-overlap"
+        )
 
     def _get_schema(self) -> TableSchema:
         if self._schema is None:  # lazy build + cache (main.py:423-425)
@@ -121,10 +131,6 @@ class PipelineJob:
             # The pool is the same single reused worker the DLQ
             # overlap uses; the plan future is always resolved before
             # the DLQ write is submitted.
-            if self._dlq_pool is None:
-                self._dlq_pool = ThreadPoolExecutor(
-                    max_workers=1, thread_name_prefix="dlq-overlap"
-                )
             plan_fut = self._dlq_pool.submit(self._plan_valid, tagged)
             try:
                 n_rows, n_dlq = self._count_tagged(tagged)
@@ -205,13 +211,6 @@ class PipelineJob:
         sequential path's."""
         fut = None
         if n_dlq > 0:
-            # one REUSED worker thread per job, created lazily: a
-            # fresh Thread per trigger would churn a py4j connection
-            # per batch in a long-running service (triggers ~1/s)
-            if self._dlq_pool is None:
-                self._dlq_pool = ThreadPoolExecutor(
-                    max_workers=1, thread_name_prefix="dlq-overlap"
-                )
             # Under pinned-thread mode (PYSPARK_PIN_THREAD, the
             # default) each Python thread maps to its own JVM thread,
             # so a plain pool worker starts with EMPTY JVM local
@@ -386,21 +385,12 @@ class PipelineJob:
         buys ~8x on the compute; rows have no order semantics here
         (the sink is set-oriented; DLQ rows carry their own payload).
 
-        ``SPARK_GRAFT_BATCH_PARTS``: target partition count; ``0``
-        disables; unset → min(defaultParallelism, 8). Batches already
+        Target: min(defaultParallelism, 8) partitions; batches already
         at least that wide are left alone. The explicit N keeps AQE
-        from coalescing the tiny exchange back to one partition."""
-        raw = os.environ.get("SPARK_GRAFT_BATCH_PARTS", "")
-        if raw == "0":
-            return batch_df
-        try:
-            target = int(raw) if raw else 0
-        except ValueError:  # pragma: no cover - config error
-            raise ValueError(f"bad SPARK_GRAFT_BATCH_PARTS: {raw!r}")
-        if target <= 0:
-            target = min(
-                batch_df.sparkSession.sparkContext.defaultParallelism, 8
-            )
+        from coalescing the tiny exchange back to one partition. A
+        deployment that wants no local shuffle sets
+        ``KAFKA_MIN_PARTITIONS`` so the source itself is that wide."""
+        target = min(batch_df.sparkSession.sparkContext.defaultParallelism, 8)
         if batch_df.rdd.getNumPartitions() >= target:
             return batch_df
         return batch_df.repartition(target)
@@ -457,30 +447,17 @@ class PipelineJob:
         deployment shape, with the same checkpoint (and therefore the
         same at-least-once contract) as the continuous service.
 
-        AQE is disabled on the session by default: the foreachBatch
-        body re-runs the same fixed, tiny plan every trigger, and
-        AQE's stage-at-a-time scheduling adds ~200 ms per trigger for
-        re-optimizations that can never change this plan (measured,
-        THROUGHPUT_r09). An ingest service owns its session (the
-        reference is a dedicated process, main.py:468), so the global
-        conf is safe; set ``SPARK_GRAFT_INGEST_AQE=keep`` to leave the
-        session untouched when sharing it with analytic queries."""
-        if os.environ.get("SPARK_GRAFT_INGEST_AQE", "") != "keep":
-            stream_df.sparkSession.conf.set(
-                "spark.sql.adaptive.enabled", "false"
-            )
-        # the per-trigger tagged cache lives for milliseconds and is
-        # read 2-3 times — columnar compression buys nothing there and
-        # costs ~60 ms per 25 k-row build (measured, r9b profile). An
-        # ingest service owns its session (see above); a shared
-        # analytic session sets the knob to keep compression.
-        if (
-            os.environ.get("SPARK_GRAFT_INGEST_CACHE_COMPRESS", "")
-            != "keep"
-        ):
-            stream_df.sparkSession.conf.set(
-                "spark.sql.inMemoryColumnarStorage.compressed", "false"
-            )
+        The query runs with AQE and in-memory columnar compression
+        OFF. The foreachBatch body re-runs the same fixed, tiny plan
+        every trigger, and AQE's stage-at-a-time scheduling adds ~200 ms
+        per trigger for re-optimizations that can never change this plan
+        (measured, THROUGHPUT_r09). The per-trigger tagged cache lives
+        for milliseconds and is read 2-3 times, so compression buys
+        nothing there and costs ~60 ms per 25 k-row build (measured, r9b
+        profile). Structured Streaming runs each query on a clone of the
+        session taken inside ``writer.start()``, so both keys are set for
+        that call only and the caller's session gets its own values back
+        — an analytic session can host the ingest stream unchanged."""
         writer = stream_df.writeStream.foreachBatch(self.run_batch).option(
             "checkpointLocation", checkpoint_dir
         )
@@ -488,7 +465,15 @@ class PipelineJob:
             writer = writer.trigger(availableNow=True)
         elif trigger_interval:
             writer = writer.trigger(processingTime=trigger_interval)
-        return writer.start()
+        conf = stream_df.sparkSession.conf
+        saved = {key: conf.get(key) for key in _INGEST_CONF_OFF}
+        for key in saved:
+            conf.set(key, "false")
+        try:
+            return writer.start()
+        finally:
+            for key, value in saved.items():
+                conf.set(key, value)
 
 
 class StaticSchemaProvider:

@@ -238,7 +238,7 @@ def test_latest_throughput_artifact_is_green():
                 b["rows_read"] == b["rows"]
                 for b in r["per_batch"][1:]
             ), name
-    # r9's intra-trigger fan-out (SPARK_GRAFT_BATCH_PARTS) decouples
+    # r9's automatic intra-trigger fan-out (PipelineJob) decouples
     # compute width from topic partitions, so 1p ≈ 8p at equal batch
     # size (both run ~8-wide; 1p pays a small local shuffle, 8p pays
     # multi-file listing). The old strict 8p > 1p ladder no longer

@@ -128,46 +128,9 @@ def test_valid_rows_cast_types_hold(extra_fields):
         assert not math.isnan(r.speed)
 
 
-@settings(max_examples=15, deadline=None)
-@given(st.lists(payloads, min_size=1, max_size=40))
-def test_jvm_and_pandas_validators_agree(raw_payloads):
-    """Differential twin: the VariantType CASE expression (default)
-    and the Arrow pandas-UDF closure must produce the IDENTICAL _err
-    column — same drop markers, same error strings, same first-failing
-    check — for arbitrary JSON-ish input."""
-    import os
-
-    from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-        tag_errors,
-    )
-
-    spark = _get_spark()
-    raw = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(raw_payloads)], "id long, value string"
-    )
-
-    def errs(mode):
-        os.environ["SPARK_GRAFT_VALIDATOR"] = mode
-        try:
-            return {
-                r["id"]: r["_err"]
-                for r in tag_errors(raw, SCHEMA).collect()
-            }
-        finally:
-            os.environ.pop("SPARK_GRAFT_VALIDATOR", None)
-
-    assert errs("jvm") == errs("pandas")
-
-
-def test_jvm_validator_has_no_python_ops():
-    """The opt-in VariantType validator keeps the whole ingest tag
-    stage JVM-side: no BatchEvalPython AND no ArrowEvalPython in the
-    plan. (It is NOT the default — semantics are twin-proven but
-    variant expression evaluation measured ~30x slower than the Arrow
-    UDF on current Spark; this pin keeps the plan shape honest for
-    when a later Spark version inverts that.)"""
-    import os
-
+def test_validator_plan_is_one_arrow_udf():
+    """The tag stage is the Arrow-batched UDF (one per batch), never
+    the row-at-a-time BatchEvalPython."""
     from kafka2clickhouse_py_streamer_spark.pipeline.core import (
         tag_errors,
     )
@@ -175,35 +138,17 @@ def test_jvm_validator_has_no_python_ops():
         formatted_plan,
     )
 
-    spark = _get_spark()
-    raw = spark.createDataFrame([("{}",)], "value string")
-    os.environ["SPARK_GRAFT_VALIDATOR"] = "jvm"
-    try:
-        plan = formatted_plan(tag_errors(raw, SCHEMA))
-    finally:
-        os.environ.pop("SPARK_GRAFT_VALIDATOR", None)
+    raw = _get_spark().createDataFrame([("{}",)], "value string")
+    plan = formatted_plan(tag_errors(raw, SCHEMA))
+    assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-
-    # and the DEFAULT remains the Arrow-batched UDF (one per batch)
-    plan_default = formatted_plan(tag_errors(raw, SCHEMA))
-    assert "ArrowEvalPython" in plan_default
-    assert "BatchEvalPython" not in plan_default
 
 
-def test_jvm_mode_falls_back_on_hostile_required_name():
-    """r8 advice: the jvm-mode identifier guard checked only
-    schema.columns, but the CASE text also interpolates the configured
-    REQUIRED_COLUMNS names raw into variant_get path literals and error
-    strings — a quote/dot/$ there must route to the pandas validator,
-    not produce an AnalysisException or a silently wrong JSON path."""
-    import os
-
+def test_hostile_required_name_error_string():
+    """A configured REQUIRED_COLUMNS name full of quote/dot/$ is matched
+    as a literal key and echoed verbatim in the error string."""
     from kafka2clickhouse_py_streamer_spark.pipeline.core import (
         tag_errors,
-    )
-    from kafka2clickhouse_py_streamer_spark.plans.analysis import (
-        formatted_plan,
     )
 
     hostile = build_table_schema(
@@ -211,75 +156,60 @@ def test_jvm_mode_falls_back_on_hostile_required_name():
         required_columns=["a'b.c$d"],
         string_enum_columns=[],
     )
-    spark = _get_spark()
-    raw = spark.createDataFrame([("{}",)], "value string")
-    os.environ["SPARK_GRAFT_VALIDATOR"] = "jvm"
-    try:
-        plan = formatted_plan(tag_errors(raw, hostile))
-    finally:
-        os.environ.pop("SPARK_GRAFT_VALIDATOR", None)
-    # fell back to the Arrow UDF — no variant expressions in the plan
-    assert "ArrowEvalPython" in plan
-    assert "variant_get" not in plan
+    raw = _get_spark().createDataFrame([("{}",)], "value string")
+    [row] = tag_errors(raw, hostile).collect()
+    assert row["_err"] == "data must contain ['a'b.c$d'] properties"
 
 
-def test_jvm_and_pandas_validators_agree_on_parser_edges():
+_NOT_INT = "data.device_id must be integer"
+# (message, expected _err): None = valid, DROP = silently dropped
+PARSER_EDGES = [
+    ('{"device_id": 1}{truncated', "DROP"),
+    ('{"device_id": 1} junk', "DROP"),
+    ('{"device_id": 1},{"device_id": 2}', "DROP"),
+    ('{"device_id": 1}   ', None),
+    ('  {"device_id": 1}', None),
+    ('{"device_id": 01}', "DROP"),
+    ("{'device_id': 1}", "DROP"),
+    ('{"device_id": 1e999}', _NOT_INT),
+    ('{"device_id": 99999999999999999999}', None),
+    ('{"device_id": 1.0}', _NOT_INT),
+    ('{"device_id": 0.0}', _NOT_INT),
+    ('{"device_id": true}', _NOT_INT),
+    ('{"device_id": "1"}', _NOT_INT),
+    ('{"device_id": 1, "speed": [1,2]}', "data.speed must be number"),
+    ('{"device_id": 1, "note": {"x": 1}}', "data.note must be string"),
+    ('﻿{"device_id": 1}', "DROP"),
+    (" ", "DROP"),
+    ("\t\n", "DROP"),
+    ("null", "DROP"),
+    ("true", "DROP"),
+    ('"str"', "DROP"),
+    ("[1]", "DROP"),
+    ("[]", "DROP"),
+    ("{}", "data must contain ['device_id'] properties"),
+    ('{"device_id": null}', None),
+    ('{"": 1, "device_id": 1}', None),
+    ('{"device_id": -0}', None),
+    ('{"device_id": 1E2}', _NOT_INT),
+    ('{"device_id": 0.1e1}', _NOT_INT),
+]
+
+
+def test_validator_parser_edges_pinned():
     """Deterministic adversarial parse shapes — the class the random
-    strategy under-samples. Trailing garbage after a complete object
-    (Jackson is lenient; the wrapped-array parse restores strictness),
-    concatenated objects, leading zeros, single quotes, deep nesting,
-    unicode whitespace, BOM, numeric edge tokens."""
-    import os
-
+    strategy under-samples: trailing garbage after a complete object,
+    concatenated objects, leading zeros, single quotes, unicode
+    whitespace, BOM, numeric edge tokens. Each ``_err`` is pinned."""
     from kafka2clickhouse_py_streamer_spark.pipeline.core import (
+        _DROP,
         tag_errors,
     )
 
-    cases = [
-        '{"device_id": 1}{truncated',
-        '{"device_id": 1} junk',
-        '{"device_id": 1},{"device_id": 2}',
-        '{"device_id": 1}   ',
-        '  {"device_id": 1}',
-        '{"device_id": 01}',
-        "{'device_id': 1}",
-        '{"device_id": 1e999}',
-        '{"device_id": 99999999999999999999}',
-        '{"device_id": 1.0}',
-        '{"device_id": 0.0}',
-        '{"device_id": true}',
-        '{"device_id": "1"}',
-        '{"device_id": 1, "speed": [1,2]}',
-        '{"device_id": 1, "note": {"x": 1}}',
-        '﻿{"device_id": 1}',
-        " ",
-        "\t\n",
-        "null",
-        "true",
-        '"str"',
-        "[1]",
-        "[]",
-        "{}",
-        '{"device_id": null}',
-        '{"": 1, "device_id": 1}',
-        '{"device_id": -0}',
-        '{"device_id": 1E2}',
-        '{"device_id": 0.1e1}',
-    ]
-    spark = _get_spark()
-    raw = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(cases)], "id long, value string"
+    raw = _get_spark().createDataFrame(
+        [(i, m) for i, (m, _) in enumerate(PARSER_EDGES)],
+        "id long, value string",
     )
-
-    def errs(mode):
-        os.environ["SPARK_GRAFT_VALIDATOR"] = mode
-        try:
-            return {
-                r["id"]: r["_err"] for r in tag_errors(raw, SCHEMA).collect()
-            }
-        finally:
-            os.environ.pop("SPARK_GRAFT_VALIDATOR", None)
-
-    jvm, pandas_ = errs("jvm"), errs("pandas")
-    for i, c in enumerate(cases):
-        assert jvm[i] == pandas_[i], (c, jvm[i], pandas_[i])
+    got = {r["id"]: r["_err"] for r in tag_errors(raw, SCHEMA).collect()}
+    for i, (msg, want) in enumerate(PARSER_EDGES):
+        assert got[i] == (_DROP if want == "DROP" else want), msg

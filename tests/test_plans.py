@@ -1999,9 +1999,11 @@ def test_s09_plane_count_is_scale_derived(spark, sf_dir):
     # (both engines count the RAW embeddings table: metadata-cheap on
     # the Spark side, where the filtered count would scan the
     # embedding column)
+    # (a VIEW over range(): COUNT(*) streams it — a 10**9-row TABLE
+    # would hold ~8 GB in this process)
     con = duckdb.connect()
     for n in (0, 500, 512, 513, 2_000, 200_000, 10**9):
-        con.execute("CREATE OR REPLACE TABLE embeddings AS "
+        con.execute("CREATE OR REPLACE VIEW embeddings AS "
                     f"SELECT * FROM range({max(n, 0)})")
         got = con.execute(_planes_sql()).fetchone()[0]
         assert got == planes_for(n), (n, got, planes_for(n))

@@ -3024,10 +3024,8 @@ def test_w16_profile_sketch_streams_and_compacts(spark, tmp_path):
 def test_fan_out_spreads_narrow_batch(spark):
     """A 1-partition micro-batch must reach the sink spread across
     cores (the r9 parity_1p fix: validate/cast otherwise run on one
-    core per trigger); SPARK_GRAFT_BATCH_PARTS=0 opts out and a batch
-    already at least that wide is left alone."""
-    import os as _os
-
+    core per trigger); a batch already at least that wide is left
+    alone."""
     widths = []
 
     def width_sink(df):
@@ -3038,13 +3036,6 @@ def test_fan_out_spreads_narrow_batch(spark):
     job.run_batch(narrow)
     expect = min(spark.sparkContext.defaultParallelism, 8)
     assert widths[-1] == expect
-
-    _os.environ["SPARK_GRAFT_BATCH_PARTS"] = "0"
-    try:
-        job.run_batch(narrow)
-        assert widths[-1] == 1
-    finally:
-        _os.environ.pop("SPARK_GRAFT_BATCH_PARTS")
 
     wide = make_batch(spark, [GOOD] * 100).repartition(16)
     job.run_batch(wide)
@@ -3065,53 +3056,55 @@ def test_dlq_write_is_single_task_for_small_split(spark):
 
 
 def test_start_disables_aqe_by_default(spark, tmp_path):
-    """PipelineJob.start turns AQE and in-memory columnar compression
-    off for the ingest session (fixed micro-batch plans gain nothing
-    from stage-at-a-time scheduling; a cache that lives milliseconds
-    gains nothing from compression); SPARK_GRAFT_INGEST_AQE=keep and
-    SPARK_GRAFT_INGEST_CACHE_COMPRESS=keep leave each alone."""
-    import os as _os
-
+    """PipelineJob.start runs its query with AQE and in-memory columnar
+    compression off (fixed micro-batch plans gain nothing from
+    stage-at-a-time scheduling; a cache that lives milliseconds gains
+    nothing from compression) — on the query's own session clone only:
+    the caller's session keeps its values."""
     _COMPRESS = "spark.sql.inMemoryColumnarStorage.compressed"
+    keys = ("spark.sql.adaptive.enabled", _COMPRESS)
+    seen = []
+
+    class ConfProbeJob(PipelineJob):
+        def run_batch(self, batch_df, batch_id=0):
+            seen.append({k: batch_df.sparkSession.conf.get(k) for k in keys})
+            super().run_batch(batch_df, batch_id)
+
     src = str(tmp_path / "in")
     make_batch(spark, [GOOD]).write.parquet(src)
     stream = spark.readStream.schema("value string").parquet(src)
     sink, dlq = ListSink(), ListSink()
-    job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
+    job = ConfProbeJob(StaticSchemaProvider(SCHEMA), sink, dlq)
 
+    before = {k: spark.conf.get(k) for k in keys}
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set(_COMPRESS, "true")
-    q = job.start(stream, str(tmp_path / "ck1"), available_now=True)
-    q.awaitTermination()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get(_COMPRESS) == "false"
-
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(_COMPRESS, "true")
-    _os.environ["SPARK_GRAFT_INGEST_AQE"] = "keep"
-    _os.environ["SPARK_GRAFT_INGEST_CACHE_COMPRESS"] = "keep"
     try:
-        q = job.start(stream, str(tmp_path / "ck2"), available_now=True)
+        q = job.start(stream, str(tmp_path / "ck"), available_now=True)
+        assert {k: spark.conf.get(k) for k in keys} == dict.fromkeys(
+            keys, "true"
+        )
         q.awaitTermination()
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert spark.conf.get(_COMPRESS) == "true"
+        assert {k: spark.conf.get(k) for k in keys} == dict.fromkeys(
+            keys, "true"
+        )
     finally:
-        _os.environ.pop("SPARK_GRAFT_INGEST_AQE")
-        _os.environ.pop("SPARK_GRAFT_INGEST_CACHE_COMPRESS")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set(_COMPRESS, "true")
-    assert len(sink.rows) == 2  # both runs delivered the row
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert seen == [dict.fromkeys(keys, "false")]
+    assert len(sink.rows) == 1
 
 
 @pytest.mark.parametrize("fail_times", [0, 1, 2])
-@pytest.mark.parametrize("parts_env", ["", "0"])
+@pytest.mark.parametrize("width", ["narrow", "wide"])
 @pytest.mark.parametrize("overlap", ["on", "off"])
 def test_run_batch_accounting_exact_all_paths(
-    spark, fail_times, parts_env, overlap
+    spark, fail_times, width, overlap
 ):
     """Exact row conservation through run_batch on a mixed batch, for
     every sink-failure arm (happy / drift-retry / double-failure),
-    with the fan-out both on and off, and in BOTH DLQ modes (r9b
+    with the fan-out both on (a 1-partition batch) and off (a batch
+    already wider than its target), and in BOTH DLQ modes (r9b
     overlapped default and the strict-ordering sequential path): every
     input row is exactly one of sink-delivered, DLQ'd, or silently
     dropped. The failure arms here keep the same schema across the
@@ -3123,13 +3116,13 @@ def test_run_batch_accounting_exact_all_paths(
     payloads = (
         [GOOD] * n_good + [BAD] * n_bad + ["", "  ", "{oops", "\t\n", "[1]"]
     )
+    batch = make_batch(spark, payloads)
+    batch = batch.coalesce(1) if width == "narrow" else batch.repartition(16)
     _os.environ["SPARK_GRAFT_DLQ_OVERLAP"] = overlap
-    if parts_env:
-        _os.environ["SPARK_GRAFT_BATCH_PARTS"] = parts_env
     try:
         sink, dlq = ListSink(fail_times=fail_times), ListSink()
         job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
-        job.run_batch(make_batch(spark, payloads))
+        job.run_batch(batch)
         if fail_times <= 1:
             # happy or drift-retry-then-success: valid rows delivered
             assert len(sink.rows) == n_good
@@ -3148,7 +3141,6 @@ def test_run_batch_accounting_exact_all_paths(
         # tombstones/malformed are silently dropped in every arm
         assert len(sink.rows) + len(dlq.rows) <= n_good + n_bad
     finally:
-        _os.environ.pop("SPARK_GRAFT_BATCH_PARTS", None)
         _os.environ.pop("SPARK_GRAFT_DLQ_OVERLAP", None)
 
 
