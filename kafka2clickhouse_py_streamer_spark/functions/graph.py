@@ -22,15 +22,8 @@ keeps document bodies out of the graph (d07 feeds SimHash pair ids).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from kafka2clickhouse_py_streamer_spark.session import substrate
-
-_MKDTEMP_DIRS: list[str] = []  # default temp dirs, removed at exit
 
 
 def iter_materialize(df: DataFrame, defer: bool = False) -> DataFrame:
@@ -38,58 +31,31 @@ def iter_materialize(df: DataFrame, defer: bool = False) -> DataFrame:
     contraction, k-hop frontiers, edge-list reuse). Iteration genuinely
     needs lineage TRUNCATION — a lineage-retaining persist would let
     the plan snowball across rounds, the exact problem checkpointing
-    exists to solve — so the choice is only WHERE the cut copy lives
-    (``SPARK_GRAFT_ITER_MAT``):
+    exists to solve — so the choice is only WHERE the cut copy lives,
+    and Spark's own checkpoint dir decides it:
 
-    - ``"local"`` (default): ``localCheckpoint`` — executor-local
-      blocks, fastest, the single-node form. On a real cluster an
-      executor loss kills the job (no lineage left to recompute from).
-    - ``"reliable"``: ``checkpoint`` to the fault-tolerant checkpoint
-      dir (``SPARK_GRAFT_CHECKPOINT_DIR``, or a temp dir locally;
-      point it at HDFS/S3 on a cluster) — per-round writes cost more,
-      but node loss re-reads instead of killing a multi-hour CC job.
-      This is the 100 TB deployment setting.
+    - no checkpoint dir (the local default): ``localCheckpoint`` —
+      executor-local blocks, fastest, the single-node form. On a real
+      cluster an executor loss kills the job (no lineage left to
+      recompute from).
+    - a checkpoint dir set (``spark.checkpoint.dir`` or
+      ``SparkContext.setCheckpointDir``; point it at HDFS/S3 on a
+      cluster): a reliable ``checkpoint`` there — per-round writes
+      cost more, but node loss re-reads instead of killing a
+      multi-hour CC job. This is the 100 TB deployment setting.
 
     ``defer=True`` marks the cut but lets the CALLER's next full-scan
-    action materialize it (local mode only): the CC loop counts every
+    action materialize it (local cuts only): the CC loop counts every
     round's edge set anyway, so an eager materialization job followed
     by a count job is one fixed-cost job too many — at ~100 ms/job
     fixed on small rounds the loop cost was dominated by job count,
-    not data (r10 profile). Reliable mode stays eager: a lazily-
+    not data (r10 profile). Reliable cuts stay eager: a lazily-
     checkpointed reliable cut recomputes the plan a second time to
     write the checkpoint files, which is the worse trade there.
     """
-    mode = os.environ.get("SPARK_GRAFT_ITER_MAT", "local")
-    if mode == "local":
-        return df.localCheckpoint(eager=not defer)
-    if mode != "reliable":  # pragma: no cover - config error
-        raise ValueError(f"unknown iterative materialization: {mode!r}")
-    spark = df.sparkSession
-    env_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if env_dir:
-        ckpt = env_dir
-    else:
-        # one shared default temp dir per process, atexit-removed so
-        # local runs don't leave per-round checkpoint copies behind
-        # (on clusters the env var points at HDFS/S3 and the
-        # ContextCleaner conf in session.py reclaims old files)
-        if not _MKDTEMP_DIRS:
-            import atexit
-            import shutil
-
-            d = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-            _MKDTEMP_DIRS.append(d)
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
-        ckpt = _MKDTEMP_DIRS[0]
-    # a "checkpoint_dir" substrate per resolved dir: setCheckpointDir is
-    # a context-global mutation, repeated only when the target changes
-    # (keyed on the dir, so changing SPARK_GRAFT_CHECKPOINT_DIR
-    # mid-session takes effect — r7 advice)
-    substrate(
-        spark, "checkpoint_dir", ckpt,
-        lambda: spark.sparkContext.setCheckpointDir(ckpt),
-    )
-    return df.checkpoint(eager=True)
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=not defer)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -158,8 +124,8 @@ def connected_components(
     equal via ``exceptAll``), not a checksum: one extra digest-sized
     shuffle per round, and rounds are logarithmic. Each round is cut
     through :func:`iter_materialize` so plans don't snowball
-    (``localCheckpoint`` locally; reliable ``checkpoint`` on clusters
-    via ``SPARK_GRAFT_ITER_MAT=reliable``).
+    (``localCheckpoint`` by default; a reliable ``checkpoint`` when
+    the SparkContext has a checkpoint dir, as a cluster sets).
     """
     # Job-count discipline (r10): each round runs ONE full-scan job —
     # a count() that doubles as the deferred localCheckpoint's

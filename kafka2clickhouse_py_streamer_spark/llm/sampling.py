@@ -24,12 +24,6 @@ stream independently instead.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -95,8 +89,8 @@ def _quality_deduped(d: DataFrame) -> DataFrame:
     )
 
 
-# frames persisted by _two_pass_offsets in persist mode, so long-lived
-# sessions (streaming drivers, notebooks) can release the disk blocks
+# frames persisted by _two_pass_offsets, so long-lived sessions
+# (streaming drivers, notebooks) can release the disk blocks
 # without the clearCache() sledgehammer — r7 advice: there was no
 # unpersist path at all, and many offsets consumers per session
 # accumulate unbounded DISK_ONLY blocks otherwise.
@@ -115,7 +109,7 @@ def _quality_deduped(d: DataFrame) -> DataFrame:
 # _OFFSETS_PERSISTED_CAP registrations we log a loud warning naming
 # the hook instead of corrupting data.
 _OFFSETS_PERSISTED: list[DataFrame] = []
-_OFFSETS_PERSISTED_CAP = int(os.environ.get("SPARK_GRAFT_OFFSETS_CAP", "16"))
+_OFFSETS_PERSISTED_CAP = 16
 
 
 def _session_stopped(frame: DataFrame) -> bool:
@@ -173,38 +167,9 @@ def release_offsets_materializations(blocking: bool = False) -> int:
     return n
 
 
-_SPILL_DIRS: list[str] = []
-
-
-def _reap_spill_dirs() -> None:
-    for d in _SPILL_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _SPILL_DIRS.clear()
-
-
-atexit.register(_reap_spill_dirs)
-
-
-def _spill_roundtrip(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` by writing it to a temp parquet directory and
-    reading it back. ``SPARK_GRAFT_SPILL_DIR`` names the base directory
-    (point it at shared storage on a real cluster; defaults to the
-    local temp dir). Directories are reaped at interpreter exit — they
-    must outlive every lazy consumer of the returned frame."""
-    base = os.environ.get("SPARK_GRAFT_SPILL_DIR") or os.path.join(
-        tempfile.gettempdir(), "spark_graft_spill"
-    )
-    os.makedirs(base, exist_ok=True)
-    path = os.path.join(base, f"offsets-{uuid.uuid4().hex}")
-    _SPILL_DIRS.append(path)
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def _two_pass_offsets(
     df: DataFrame, group_cols: list[str], val_col: str = "n_tokens",
     order_col: str | list[str] = "doc_id",
-    materialize: str | None = None,
     cut_input: bool = False,
 ) -> DataFrame:
     """Distributed running-sum offsets: for each row, the sum of
@@ -221,28 +186,18 @@ def _two_pass_offsets(
 
     The two passes must see the IDENTICAL (row → pid) assignment:
     range boundaries come from sampling, so the ranged frame is
-    materialized once and both passes read the materialization.
-    ``materialize`` picks how (env ``SPARK_GRAFT_OFFSETS_MAT``
-    overrides the default):
+    materialized once — persisted — and both passes read it:
+    ``StorageLevel.DISK_ONLY_2`` on a cluster (executor-local disk,
+    2× replicated; nothing multi-terabyte pinned in executor MEMORY),
+    MEMORY_AND_DISK on local masters (no peer to replicate to, no
+    terabyte frame). Lineage is RETAINED in both: an executor loss
+    reads the replica or recomputes from lineage (deterministic:
+    parquet input + RangePartitioner's fixed per-partition sampling
+    seed reproduce the same boundaries) — unlike ``localCheckpoint``,
+    which truncates lineage and dies with its executor. That is why
+    this is a persist and deliberately not :func:`iter_materialize`.
 
-    - ``"persist"`` (default): ``StorageLevel.DISK_ONLY_2`` on a
-      cluster (executor-local disk, 2× replicated; nothing
-      multi-terabyte pinned in executor MEMORY), MEMORY_AND_DISK on
-      local masters (no peer to replicate to, no terabyte frame).
-      Lineage is RETAINED in both: an executor loss reads the
-      replica or recomputes from lineage (deterministic: parquet
-      input + RangePartitioner's fixed per-partition sampling seed
-      reproduce the same boundaries) — unlike ``localCheckpoint``,
-      which truncates lineage and dies with its executor.
-    - ``"spill"``: write the ranged frame to temp parquet and read
-      it back — for clusters where the spill dir
-      (``SPARK_GRAFT_SPILL_DIR``) points at shared storage and
-      executors should hold no state at all between the passes.
-    - ``"checkpoint"``: the legacy eager non-replicated
-      ``localCheckpoint`` fast path (saves the write, fastest on a
-      single node, fragile on a real cluster).
-
-    Cache lifetime note (persist mode): the entry is keyed by logical
+    Cache lifetime note: the entry is keyed by logical
     plan in Spark's CacheManager, so an IDENTICAL re-invocation in the
     same session reuses the materialization (free for iterative
     workloads; benchmarks that want cold reps must
@@ -257,18 +212,15 @@ def _two_pass_offsets(
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     spark = df.sparkSession
     parts = spark.sparkContext.defaultParallelism
-    mode = materialize or os.environ.get(
-        "SPARK_GRAFT_OFFSETS_MAT", "persist"
-    )
     if cut_input:
         # Round 13: ``repartitionByRange`` executes its child TWICE —
         # once for the RangePartitioner's bound-sampling pass, once for
         # the actual shuffle. Callers whose input is itself an
         # expensive DAG (p07's six-stage clean corpus, p14's span
         # scrub) pass cut_input=True to materialize the narrow
-        # pre-pack rows first (iter_materialize: localCheckpoint
-        # locally, reliable checkpoint on a cluster — at 100 TB this
-        # is the pre-pack table a deployment writes anyway), so the
+        # pre-pack rows first (iter_materialize: localCheckpoint, or a
+        # reliable checkpoint when a checkpoint dir is set — at 100 TB
+        # this is the pre-pack table a deployment writes anyway), so the
         # sampling pass re-reads cheap blocks instead of re-running
         # the pipeline. Cheap inputs (p03/p04's scan projections)
         # keep the default — the cut job would cost more than the
@@ -281,31 +233,24 @@ def _two_pass_offsets(
     ranged = df.repartitionByRange(
         parts, *group_cols, *order_cols
     ).withColumn("pid", F.spark_partition_id())
-    if mode == "checkpoint":
-        ranged = ranged.localCheckpoint(eager=True)
-    elif mode == "spill":
-        ranged = _spill_roundtrip(ranged)
-    elif mode == "persist":
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        # Cluster: disk-only, 2× replicated — nothing multi-terabyte
-        # pinned in executor MEMORY, executor loss reads the replica.
-        # Local master: memory-first with disk spill (there is no peer
-        # to replicate to and no terabyte frame to pin — a forced
-        # disk round-trip would only slow the single node down).
-        # Lineage is retained either way, so total block loss
-        # recomputes instead of killing the job.
-        local = spark.conf.get("spark.master", "").startswith("local")
-        ranged = ranged.persist(
-            StorageLevel.MEMORY_AND_DISK if local
-            else StorageLevel.DISK_ONLY_2
-        )
-        # registered for release_offsets_materializations — the entry
-        # otherwise lives until clearCache/session end; the registry is
-        # capped, evicting (unpersisting) the oldest past the cap
-        _register_offsets_persist(ranged)
-    else:  # pragma: no cover - config error
-        raise ValueError(f"unknown offsets materialization: {mode!r}")
+    # Cluster: disk-only, 2× replicated — nothing multi-terabyte
+    # pinned in executor MEMORY, executor loss reads the replica.
+    # Local master: memory-first with disk spill (there is no peer
+    # to replicate to and no terabyte frame to pin — a forced
+    # disk round-trip would only slow the single node down).
+    # Lineage is retained either way, so total block loss
+    # recomputes instead of killing the job.
+    local = spark.conf.get("spark.master", "").startswith("local")
+    ranged = ranged.persist(
+        StorageLevel.MEMORY_AND_DISK if local
+        else StorageLevel.DISK_ONLY_2
+    )
+    # registered for release_offsets_materializations — the entry
+    # otherwise lives until clearCache/session end; the registry
+    # warns past the cap; release stays caller-controlled
+    _register_offsets_persist(ranged)
     totals = (
         ranged.groupBy(*group_cols, "pid")
         .agg(F.sum(val_col).alias("tot"))

@@ -1081,8 +1081,9 @@ K_GRAPH = 3
 # ``"knn_graph"`` session substrate (``session.substrate``), built ONCE
 # per session and served cut (a deployment persists the kNN index as a
 # table; rebuilding it per traversal query is not the 100 TB shape).
-# The frame is lineage-cut by iter_materialize (localCheckpoint
-# locally, reliable checkpoint on clusters), so reuse costs nothing.
+# The frame is lineage-cut by iter_materialize (localCheckpoint, or a
+# reliable checkpoint when a checkpoint dir is set), so reuse costs
+# nothing.
 # Only the derived-plane layout is a substrate — explicit ``n_planes``
 # callers (the sf1 occupancy probe) always compute fresh.
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,9 +1232,9 @@ def s10_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|nodes| rows, 2 cols) onto the edge list plus one partial+final
     agg on the destination — the classic iterate-as-dataflow plan. The
     edge list is materialized ONCE (iter_materialize — same per-round
-    pattern as d07's contraction: localCheckpoint locally, reliable
-    checkpoint under SPARK_GRAFT_ITER_MAT=reliable; a deployment
-    writes it as a table)
+    pattern as d07's contraction: localCheckpoint by default, a
+    reliable checkpoint when the SparkContext has a checkpoint dir; a
+    deployment writes it as a table)
     so the s09 self-join is not recomputed 2·iters+1 times."""
     nodes = _base(spark, sf_dir).select("vec_id")
     n = nodes.count()  # one scalar to the driver (constant in the plan)
@@ -3196,9 +3197,9 @@ def s22_khop_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion itself is output-bounded: ≤ |seeds|·K^hops rows.
 
     Materialization: the edge list is cut ONCE via iter_materialize
-    (the s10/d07 per-round pattern — localCheckpoint locally, reliable
-    checkpoint on clusters; a deployment reads the persisted s09
-    index instead), and each hop's new-frontier is cut too:
+    (the s10/d07 per-round pattern — localCheckpoint, or a reliable
+    checkpoint when a checkpoint dir is set; a deployment reads the
+    persisted s09 index instead), and each hop's new-frontier is cut too:
     hop h's anti-join references the whole reached set, whose lineage
     otherwise re-expands the s09 plane self-join once per prior hop —
     measured 3.2× super-linear at 10× data before, because the graph
@@ -3591,8 +3592,8 @@ def s24_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join + cosine + top-k window) re-executed per consumer: the
     # sf0.1 plan held 52 parquet scans / 106 exchanges. The edge list
     # is (long, long) rows — the same per-round cut d07/s10 already
-    # make (iter_materialize: localCheckpoint locally, reliable
-    # checkpoint on a cluster). Plan after: 10 scans / 17 exchanges,
+    # make (iter_materialize: localCheckpoint, or a reliable
+    # checkpoint when a checkpoint dir is set). Plan after: 10 scans / 17 exchanges,
     # wall 2.39 s → 0.66 s at sf0.1.
     edges = iter_materialize(edges)
     return triangle_stats(edges)

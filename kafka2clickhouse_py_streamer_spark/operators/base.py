@@ -294,6 +294,10 @@ _VERIFY_FIRST = [
     "p03_sequence_packing",
     "p08_flatten_mix",
     "p09_incremental_refresh",
+    "p10_budget_select",
+    "p11_curriculum_stages",
+    "p12_temperature_mix",
+    "p13_pps_sample",
     "w13_histogram_quantiles",
     "t19_heaps_fit",
     "t20_gopher_funnel",
@@ -304,10 +308,6 @@ _VERIFY_FIRST = [
     "t23_pmi_collocations",
     "w16_profile_sketch",
     "t10_char_entropy",
-    "p10_budget_select",
-    "p11_curriculum_stages",
-    "p12_temperature_mix",
-    "p13_pps_sample",
     "q01_pricing_summary",
     "q06_revenue_filter",
     "q12_distinct_agg",

@@ -33,16 +33,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Parameters are env-overridable (reference parity: the reference is
-    fully env-driven, main.py:542-578): ``SPARK_GRAFT_CPUS`` sets local
-    parallelism, ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` the shuffle width.
+    The environment supplies deployment resources only (reference
+    parity: the reference reads its deployment settings from the
+    environment, main.py:542-578): ``SPARK_GRAFT_CPUS`` sets local
+    parallelism and the default shuffle width, ``SPARK_GRAFT_DRIVER_MEM``
+    the driver heap. Every tuning conf below is a measured constant;
+    ``extra_conf`` is the one override path.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-        )
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -62,17 +63,14 @@ def get_spark(
         # (64 MB — same bound as the broadcast threshold below, so a
         # partition the planner would happily broadcast can also be
         # hash-built). Measured A/B/A at sf0.1: p07 3.59→2.28–2.52 s,
-        # d21 0.77→0.44–0.46 s; no query slower outside noise. Both
-        # env-overridable for clusters whose build sides exceed
-        # executor memory (SMJ's graceful spill is the safe fallback
-        # there — set SPARK_GRAFT_PREFER_SMJ=true).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # d21 0.77→0.44–0.46 s; no query slower outside noise. A
+        # cluster whose build sides exceed executor memory passes
+        # preferSortMergeJoin=true through ``extra_conf`` (SMJ's
+        # graceful spill is the safe fallback there).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
         # Shuffle codec stays lz4 (the Spark default), measured not
         # assumed (round-14 A/B at sf1, interleaved sessions, top-5
@@ -80,11 +78,8 @@ def get_spark(
         # d24 5.9-6.5 s lz4 vs 11.8 s zstd (the Levenshtein verify is
         # CPU-bound; zstd's extra compression CPU competes with it),
         # d17/p07/d03/p14 within noise. At cluster network volumes the
-        # trade can flip, so the knob is env-overridable.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # trade can flip; ``extra_conf`` overrides it there.
+        .config("spark.io.compression.codec", "lz4")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -95,10 +90,10 @@ def get_spark(
         # still loads (operators/base.normalize_event_time converts
         # every vintage — ns-long, NTZ, timestamp — uniformly)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # reliable-mode iter_materialize (functions/graph.py) writes a
-        # checkpoint file per iteration; let the ContextCleaner delete
-        # them once their RDDs are GC'd instead of accumulating for the
-        # application lifetime (r7 advice)
+        # with a checkpoint dir set, iter_materialize (functions/graph.py)
+        # writes a checkpoint file per iteration; let the ContextCleaner
+        # delete them once their RDDs are GC'd instead of accumulating
+        # for the application lifetime (r7 advice)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():

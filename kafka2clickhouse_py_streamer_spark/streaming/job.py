@@ -108,10 +108,7 @@ class PipelineJob:
         # cache; the count job's shuffle-map stage is the trigger's
         # single source scan (Spark reuses the registered map outputs
         # across the later writes — against a real broker the Kafka
-        # fetch is paid exactly once). This replaces r8's raw-batch
-        # persist (SPARK_GRAFT_BATCH_CACHE): same one-scan guarantee,
-        # minus a redundant 25k-row cache build per trigger (~110 ms
-        # at the parity shape, r9b profile).
+        # fetch is paid exactly once).
         #
         # Empty-before-schema-fetch order (main.py:254-255, 337-339):
         # only the FIRST non-cached-schema trigger needs a probe ahead

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import pathlib
+import re
 
 import pytest
 
@@ -64,6 +66,41 @@ def test_env_file_parser(tmp_path):
     envf = tmp_path / ".env"
     envf.write_text('A=1\nB="quoted"\nbad line\n# c\n')
     assert load_env_file(str(envf)) == {"A": "1", "B": "quoted"}
+
+
+# The package's only env reads: deployment resources, data/sink
+# locations and the reference-parity DLQ ordering switch. Tuning confs
+# are constants in session.py (``extra_conf`` overrides them), offsets
+# are always persisted and iterative cuts follow Spark's checkpoint dir.
+ENGINE_ENV_VARS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_SINK_DIR",
+    "SPARK_GRAFT_DLQ_OVERLAP",
+}
+
+
+def test_engine_env_vars_are_the_allow_list():
+    import kafka2clickhouse_py_streamer_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = {
+        m
+        for f in root.rglob("*.py")
+        for m in re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read_text())
+    }
+    assert found == ENGINE_ENV_VARS
+
+
+def test_session_tuning_confs_are_constants(spark):
+    assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+    assert spark.conf.get(
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    ) == str(64 * 1024 * 1024)
+    assert spark.sparkContext.getConf().get(
+        "spark.io.compression.codec"
+    ) == "lz4"
 
 
 def test_parquet_sinks_roundtrip(spark, tmp_path):

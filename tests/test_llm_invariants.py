@@ -141,38 +141,8 @@ def test_two_pass_offsets_matches_serial_cumsum(spark):
     check()
 
 
-def test_two_pass_offsets_materializations_agree(spark):
-    """The disk-backed materializations (DISK_ONLY_2 persist — the
-    scale-safe default — and temp-parquet spill) must agree
-    bit-for-bit with the legacy eager localCheckpoint fast path: the
-    round-6 verdict's one weak flag was the non-replicated checkpoint
-    pinning the ranged frame in executor memory, so the replacement
-    has to be provably a pure materialization swap."""
-    from kafka2clickhouse_py_streamer_spark.llm.sampling import (
-        _two_pass_offsets,
-    )
-
-    data = [
-        (i, ["a", "b", "c"][i % 3], (i * 37) % 53) for i in range(200)
-    ] + [(200, "a", 0), (201, "b", 0)]
-    df = spark.createDataFrame(data, "doc_id long, grp string, n_tokens long")
-
-    def run(mode):
-        rows = _two_pass_offsets(df, ["grp"], materialize=mode).collect()
-        return sorted(
-            (r["doc_id"], r["grp"], r["n_tokens"], r["stream_offset"])
-            for r in rows
-        )
-
-    persist = run("persist")
-    spill = run("spill")
-    checkpoint = run("checkpoint")
-    assert persist == checkpoint
-    assert spill == checkpoint
-
-
 def test_release_offsets_materializations_unpersists(spark):
-    """r7 advice: persist-mode offsets entries previously lived until
+    """r7 advice: persisted offsets entries previously lived until
     clearCache/session end with NO unpersist path — long-lived
     sessions accumulate unbounded disk blocks. The release hook must
     unpersist every tracked frame, be idempotent, and leave lazy
@@ -190,7 +160,7 @@ def test_release_offsets_materializations_unpersists(spark):
         [(i, "g", i % 7) for i in range(50)],
         "doc_id long, grp string, n_tokens long",
     )
-    out = _two_pass_offsets(df, ["grp"], materialize="persist")
+    out = _two_pass_offsets(df, ["grp"])
     expect = {r["doc_id"]: r["stream_offset"] for r in out.collect()}
     assert len(_OFFSETS_PERSISTED) == 1
     ranged = _OFFSETS_PERSISTED[0]
@@ -230,7 +200,7 @@ def test_offsets_registry_never_auto_unpersists(spark, monkeypatch, caplog):
         )
         with caplog.at_level(logging.WARNING):
             frames.append(
-                sampling._two_pass_offsets(df, ["grp"], materialize="persist")
+                sampling._two_pass_offsets(df, ["grp"])
             )
     reg = sampling._OFFSETS_PERSISTED
     assert len(reg) == 4  # nothing evicted

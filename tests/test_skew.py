@@ -236,49 +236,56 @@ def test_star_steps_window_form_matches_join_form(spark):
             assert got == want, (new.__name__, shape)
 
 
-def test_iter_materialize_reliable_mode_agrees(spark, monkeypatch, tmp_path):
-    """SPARK_GRAFT_ITER_MAT=reliable swaps every per-round
+def test_iter_materialize_reliable_mode_agrees(spark, tmp_path):
+    """A SparkContext checkpoint dir swaps every per-round
     localCheckpoint for a fault-tolerant checkpoint (the 100 TB
     deployment setting: executor loss re-reads instead of killing an
     hours-long CC job). Labels, round counts, and the checkpoint-dir
     side effect must all hold, and results must equal local mode
     bit-for-bit."""
+    import os
+
     from kafka2clickhouse_py_streamer_spark.functions.graph import (
         connected_components,
     )
 
+    def files_under(d):
+        return [
+            os.path.join(dp, f) for dp, _dn, fn in os.walk(d) for f in fn
+        ]
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
     local_labels, local_rounds = connected_components(
         _chain_edges(spark, 64)
     )
     local = {(r.doc_id, r.cluster_id) for r in local_labels.collect()}
 
-    monkeypatch.setenv("SPARK_GRAFT_ITER_MAT", "reliable")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
-    labels, rounds = connected_components(_chain_edges(spark, 64))
-    got = {(r.doc_id, r.cluster_id) for r in labels.collect()}
-    assert got == local == {(i, 0) for i in range(64)}
-    assert rounds == local_rounds
-    # the reliable copies really landed in the configured directory
-    import os
+    try:
+        sc.setCheckpointDir(str(tmp_path / "ck"))
+        labels, rounds = connected_components(_chain_edges(spark, 64))
+        got = {(r.doc_id, r.cluster_id) for r in labels.collect()}
+        assert got == local == {(i, 0) for i in range(64)}
+        assert rounds == local_rounds
+        # the reliable copies really landed in the configured directory
+        assert files_under(tmp_path / "ck"), (
+            "reliable mode wrote no checkpoint files"
+        )
 
-    ckpt_files = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(tmp_path / "ck")
-        for f in fn
-    ]
-    assert ckpt_files, "reliable mode wrote no checkpoint files"
-
-    # r7 advice: a mid-session change of SPARK_GRAFT_CHECKPOINT_DIR
-    # must take effect (the dir-set memo is keyed on (appId, dir), not
-    # appId alone — previously the second dir was silently ignored)
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck2"))
-    labels2, _ = connected_components(_chain_edges(spark, 32))
-    assert {(r.doc_id, r.cluster_id) for r in labels2.collect()} == {
-        (i, 0) for i in range(32)
-    }
-    ck2_files = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(tmp_path / "ck2")
-        for f in fn
-    ]
-    assert ck2_files, "changed checkpoint dir was ignored"
+        # r7 advice: a mid-session change of the checkpoint dir must
+        # take effect (the cut reads the context's current dir)
+        sc.setCheckpointDir(str(tmp_path / "ck2"))
+        labels2, _ = connected_components(_chain_edges(spark, 32))
+        assert {(r.doc_id, r.cluster_id) for r in labels2.collect()} == {
+            (i, 0) for i in range(32)
+        }
+        assert files_under(tmp_path / "ck2"), (
+            "changed checkpoint dir was ignored"
+        )
+    finally:
+        # PySpark has no public unset; clear the Scala-side Option so
+        # the rest of the session keeps cutting locally
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None)
+        )
+    assert sc.getCheckpointDir() is None
