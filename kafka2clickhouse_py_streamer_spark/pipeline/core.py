@@ -118,6 +118,36 @@ def _make_validator(cols: dict[str, str], required: list[str], drop: str):
     return validate_row
 
 
+def _zip_finder_evictor():
+    """Returns ``evict()``, which drops every ``zipimport.zipimporter``
+    from the calling process's ``sys.path_importer_cache``.
+
+    The validator UDF calls it first. Spark puts ``pyspark.zip`` and
+    the spark-core jar on each worker's PYTHONPATH, and pyspark's
+    worker calls ``importlib.invalidate_caches()`` at the start of
+    every task. On Python < 3.12 that makes every cached zip finder (one per package
+    directory imported from a zip) eagerly re-read its whole archive
+    directory: 1 328 entries for ``pyspark.zip``, 5 359 for the jar,
+    about half of a reused worker's CPU per task (SCALE.md, "Python
+    worker zip rescans"). Evicting the finders is plain cache eviction:
+    ``PathFinder`` rebuilds one through ``sys.path_hooks`` the next time
+    an import needs that path, and imported modules keep their loaders.
+
+    Nested so cloudpickle ships it by value (see _make_validator)."""
+
+    def evict() -> None:
+        import sys
+        import zipimport
+
+        cache = sys.path_importer_cache
+        for path in [
+            p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)
+        ]:
+            del cache[path]
+
+    return evict
+
+
 def _schema_fingerprint(schema: TableSchema) -> tuple:
     """Value-identity key for per-schema plan caches: two TableSchema
     objects with the same columns/required produce identical plan
@@ -147,26 +177,36 @@ def tag_errors(
     registers a fresh JVM UDF — pure driver-side fixed cost at high
     trigger rates (THROUGHPUT_r08's parity_1p regime). The registry's
     applicationId scoping means a restarted session can't see stale
-    JVM refs."""
+    JVM refs.
 
-    def build():
-        validate_row = _make_validator(
-            {c.name: c.json_type for c in schema.columns},
-            list(schema.required),
-            _DROP,
-        )
-
-        @F.pandas_udf(StringType())
-        def _validate(vals: pd.Series) -> pd.Series:
-            return vals.map(validate_row)
-
-        return _validate
-
+    The UDF evicts its worker's zip finders before validating, so the
+    next task's ``importlib.invalidate_caches()`` re-reads no zip
+    archive (see _zip_finder_evictor)."""
     _validate = substrate(
         raw_df.sparkSession, "validator_udf", _schema_fingerprint(schema),
-        build,
+        lambda: _validator_udf(schema),
     )
     return raw_df.withColumn("_err", _validate(F.col(value_col)))
+
+
+def _validator_udf(schema: TableSchema):
+    """The Arrow-batched validator UDF for ``schema`` (tag_errors'
+    substrate build). Its Python function closes over plain data and
+    by-value helpers only, so executors import nothing from this
+    package."""
+    validate_row = _make_validator(
+        {c.name: c.json_type for c in schema.columns},
+        list(schema.required),
+        _DROP,
+    )
+    evict = _zip_finder_evictor()
+
+    @F.pandas_udf(StringType())
+    def _validate(vals: pd.Series) -> pd.Series:
+        evict()
+        return vals.map(validate_row)
+
+    return _validate
 
 
 def dlq_condition():

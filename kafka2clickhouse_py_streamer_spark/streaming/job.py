@@ -379,8 +379,9 @@ class PipelineJob:
         one core per trigger too (THROUGHPUT_r08's parity_1p regime —
         ~200 ms UDF + ~300 ms from_json + casts all serial). A local
         round-robin exchange of a 25 k-row batch costs ~100 ms and
-        buys ~8x on the compute; rows have no order semantics here
-        (the sink is set-oriented; DLQ rows carry their own payload).
+        spreads the compute over ``target`` cores (4 on a 4-core
+        host, at most 8); rows have no order semantics here (the sink
+        is set-oriented; DLQ rows carry their own payload).
 
         Target: min(defaultParallelism, 8) partitions; batches already
         at least that wide are left alone. The explicit N keeps AQE

@@ -10,6 +10,8 @@ from __future__ import annotations
 import json
 import math
 
+import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -213,3 +215,141 @@ def test_validator_parser_edges_pinned():
     got = {r["id"]: r["_err"] for r in tag_errors(raw, SCHEMA).collect()}
     for i, (msg, want) in enumerate(PARSER_EDGES):
         assert got[i] == (_DROP if want == "DROP" else want), msg
+
+
+def _zip_finder_count() -> int:
+    import sys
+    import zipimport
+
+    return sum(
+        isinstance(f, zipimport.zipimporter)
+        for f in sys.path_importer_cache.values()
+    )
+
+
+def test_zip_finder_evictor_drops_finders_and_imports_still_work(tmp_path):
+    """The evictor leaves no zip finder in the importer cache, and a
+    module not yet imported from the same zip still imports afterwards:
+    eviction is cache eviction, finders are rebuilt on demand."""
+    import importlib
+    import sys
+    import zipfile
+
+    from kafka2clickhouse_py_streamer_spark.pipeline.core import (
+        _zip_finder_evictor,
+    )
+
+    archive = tmp_path / "evict_probe.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("evict_probe_pkg/__init__.py", "")
+        zf.writestr("evict_probe_pkg/first.py", "X = 1\n")
+        zf.writestr("evict_probe_pkg/second.py", "Y = 2\n")
+    saved_path = list(sys.path)
+    saved_cache = dict(sys.path_importer_cache)
+    try:
+        sys.path.insert(0, str(archive))
+        assert importlib.import_module("evict_probe_pkg.first").X == 1
+        assert _zip_finder_count() > 0
+
+        _zip_finder_evictor()()
+        assert _zip_finder_count() == 0
+
+        assert importlib.import_module("evict_probe_pkg.second").Y == 2
+    finally:
+        sys.path[:] = saved_path
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+        for name in [m for m in sys.modules if m.startswith("evict_probe_pkg")]:
+            del sys.modules[name]
+
+
+def test_validator_worker_keeps_no_zip_finder():
+    """A probe UDF chained over the validator's output runs in the same
+    Python worker, right after the validator on each batch: it must see
+    no zip finder. The control probe re-scans sys.path first and must
+    see some, or this host has no zip on the worker path to evict."""
+    from pyspark.sql import functions as F
+
+    from kafka2clickhouse_py_streamer_spark.pipeline.core import tag_errors
+
+    def probe(rescan: bool):
+        @F.pandas_udf("long")
+        def count_zip_finders(errs: pd.Series) -> pd.Series:
+            import importlib.util
+            import sys
+            import zipimport
+
+            if rescan:
+                importlib.util.find_spec("no_such_module_zip_finder_probe")
+            n = sum(
+                isinstance(f, zipimport.zipimporter)
+                for f in sys.path_importer_cache.values()
+            )
+            return pd.Series([n] * len(errs))
+
+        return count_zip_finders
+
+    raw = _get_spark().createDataFrame(
+        [(m,) for m, _ in PARSER_EDGES], "value string"
+    ).repartition(2)
+    tagged = tag_errors(raw, SCHEMA)
+
+    control = [r.n for r in tagged.select(probe(True)("_err").alias("n")).collect()]
+    if not any(control):
+        pytest.skip("no zip archive on the Python worker's sys.path")
+    got = [r.n for r in tagged.select(probe(False)("_err").alias("n")).collect()]
+    assert len(got) == len(PARSER_EDGES)
+    assert set(got) == {0}
+
+
+# one valid, one DLQ and one dropped message
+_BY_VALUE_MSGS = ['{"device_id": 1}', '{"device_id": "1"}', "not json"]
+
+_BY_VALUE_SCRIPT = """
+import json, os, sys
+import importlib.util
+
+pkg = "kafka2clickhouse_py_streamer_spark"
+sys.path[:] = [
+    p for p in sys.path if not os.path.isdir(os.path.join(p or ".", pkg))
+]
+assert importlib.util.find_spec(pkg) is None
+
+import pandas as pd
+from pyspark import cloudpickle
+
+with open(sys.argv[1], "rb") as fh:
+    func = cloudpickle.load(fh)
+out = list(func(pd.Series(json.loads(sys.argv[2]))))
+assert not [m for m in sys.modules if m.split(".")[0] == pkg]
+print(json.dumps(out))
+"""
+
+
+def test_validator_udf_pickles_by_value(tmp_path):
+    """The validator UDF's Python function, as cloudpickle ships it to
+    executors, runs in a process that cannot import this package and
+    gives the same ``_err`` as in-process."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from kafka2clickhouse_py_streamer_spark.pipeline.core import (
+        _DROP,
+        _validator_udf,
+    )
+
+    func = _validator_udf(SCHEMA).func
+    want = list(func(pd.Series(_BY_VALUE_MSGS)))
+    assert want == [None, _NOT_INT, _DROP]
+
+    pickled = tmp_path / "validate.pkl"
+    pickled.write_bytes(cloudpickle.dumps(func))
+    done = subprocess.run(
+        [sys.executable, "-c", _BY_VALUE_SCRIPT, str(pickled),
+         json.dumps(_BY_VALUE_MSGS)],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert done.returncode == 0, done.stderr
+    assert json.loads(done.stdout.splitlines()[-1]) == want
