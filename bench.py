@@ -190,7 +190,7 @@ def time_queries(
 # 32 (p03, d15, s22, ...) re-earns wall-time evidence every
 # ceil(|registry - headline| / EXTRA_K) rounds without touching the
 # headline total the 2× gate reads (committed BENCH_SPREAD.json
-# history is the record — check_doc_metrics resolves it via git).
+# history is the record).
 EXTRA_K = 6
 
 
@@ -319,11 +319,11 @@ def main() -> None:
         sidecar["extra_round"] = _current_round()
     sidecar.update(gate_fields(times, host_cal))
     # The sidecar is the TRACKED median-of-3 record at the driver's
-    # bench scale (sf0.1) — round notes quote it beside the driver run
-    # (checked by tools/check_doc_metrics.py). A smoke run at another
-    # scale (sf0.01 iteration loop) must not overwrite it with numbers
-    # the round notes never meant (the round-11 accident: a sf0.01
-    # verify pass clobbered the sealed sf0.1 recording).
+    # bench scale (sf0.1) — round notes quote it beside the driver run.
+    # A smoke run at another scale (sf0.01 iteration loop) must not
+    # overwrite it with numbers the round notes never meant (the
+    # round-11 accident: a sf0.01 verify pass clobbered the sealed sf0.1
+    # recording).
     if sf_val == 0.1:
         with open(os.path.join(REPO_DIR, "BENCH_SPREAD.json"), "w") as fh:
             json.dump(sidecar, fh, indent=1)

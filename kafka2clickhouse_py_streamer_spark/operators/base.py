@@ -125,211 +125,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-# Verification priority: the driver walks ``queries()`` in dict order and
-# records rows for roughly the first 50 entries per round. This list is
-# GENERATED — run ``python tools/rotate_verify_first.py --write`` after
-# each round. Ordering: never-green/errored first, then greens whose
-# defining file churned since the green was recorded (oldest round
-# first), then the rest oldest-evidence-first. ``tests/test_rotation.py``
-# asserts the committed list matches the tool and that no query's
-# evidence can age out of the driver window unseen.
-_VERIFY_FIRST = [
-    # green-r11 but file churned since
-    "d06_simhash_pairs",
-    "m06_multimodal_packing",
-    "w05_attribution",
-    "w06_window_distinct",
-    "p14_span_scrub_pipeline",
-    "p15_dedup_rebalance",
-    "p16_pack_efficiency",
-    "q44_frame_navigation",
-    "q52_interval_frame",
-    "q31_moment_stats",
-    "q32_exact_percentiles",
-    "q33_argmin_argmax",
-    "q34_filtered_agg",
-    "q35_in_subquery",
-    "q11_sort_limit",
-    "q15_set_ops",
-    "q16_string_fns",
-    "q17_date_fns",
-    "q18_json_fns",
-    "q19_array_fns",
-    "q20_conditional",
-    "q22_pivot",
-    "q30_unpivot",
-    "q39_math_fns",
-    "q40_full_outer",
-    "q42_posexplode",
-    "q43_ratio_to_report",
-    "q45_calendar_arithmetic",
-    "q46_string_agg",
-    "q50_range_join",
-    "q02_region_revenue",
-    "q03_top_orders",
-    "q04_semi_join",
-    "q05_anti_join",
-    "q07_left_join_count",
-    "q21_correlated_subquery",
-    "q25_theta_join",
-    "q26_asof_join",
-    "q47_exists_pair",
-    # green-r12 but file churned since
-    "d17_containment_pairs",
-    "d18_bloom_decontamination",
-    "d19_containment_calibration",
-    "d07_dedup_clusters",
-    "d08_canonical_corpus",
-    "d09_contamination",
-    "s12_product_quantize",
-    "s13_pq_adc_topk",
-    "s14_ivfpq_search",
-    "s15_mrl_truncation_recall",
-    "s16_rrf_fusion",
-    "s17_probe_recall_sweep",
-    "s18_knn_label_eval",
-    "s01_cosine_topk",
-    "s02_lsh_buckets",
-    "s03_lsh_topk",
-    "s04_ivf_topk",
-    "s05_trained_ivf",
-    "s06_quantize",
-    "s07_knn_label",
-    "s19_cascade_rerank",
-    "t11_readability",
-    "t12_lexical_diversity",
-    "w07_window_topk",
-    "w08_disorder_profile",
-    "t13_zipf_fit",
-    "w09_gap_fill",
-    "w10_rate_anomaly",
-    "t14_bigram_logprob",
-    "w11_rollup_cascade",
-    "m07_phash_neardup",
-    "m01_media_metadata",
-    "m02_decode_stats",
-    "m08_media_canonical",
-    "q54_histogram",
-    "q55_robust_outliers",
-    "q57_cohort_retention",
-    "q60_linear_trend",
-    "q36_range_frame",
-    "q37_ntile_cume",
-    "q51_skew_profile",
-    "q38_collect_agg",
-    "q62_lateral_topn",
-    "q48_salted_join",
-    "q49_upsert_merge",
-    "q53_funnel",
-    "q56_mom_growth",
-    "q58_scd2_intervals",
-    "q59_concurrency",
-    "q61_gaps_islands",
-    # green-r13 but file churned since
-    "s20_index_staleness",
-    "s21_filtered_search",
-    "s22_khop_expansion",
-    "s23_mips_norm_pruned",
-    "s24_triangle_count",
-    "s25_radius_search",
-    "p01_train_test_split",
-    "p02_stratified_sample",
-    "p04_global_shuffle",
-    "p05_clean_corpus",
-    "p06_domain_mix",
-    "p07_corpus_pipeline",
-    "p17_chunk_pack",
-    "p18_shard_manifest",
-    "p19_chunk_dedup_pack",
-    "p20_epoch_budget",
-    "p21_split_leakage",
-    "p22_padding_waste",
-    "p23_weighted_sample",
-    "p24_shard_balance",
-    "m03_frame_sample",
-    "m04_feature_extract",
-    "m05_media_dedup",
-    "d20_snapshot_diff",
-    "d21_softdedup_weights",
-    "d22_dedup_roi",
-    "d23_removal_propagation",
-    "d24_editdist_neardup",
-    "d25_lsh_layout_tuner",
-    "d10_minhash_calibration",
-    "d11_ngram_jaccard_capped",
-    "t15_perplexity_buckets",
-    "t16_bm25_topk",
-    "t17_chunk_passages",
-    "t18_ngram_novelty",
-    "t01_token_count",
-    "t02_quality_score",
-    "t03_langid",
-    "t04_fingerprint",
-    "t05_rolling_hash",
-    "t06_repetition",
-    "t07_vocab_idf",
-    "t08_unigram_logprob",
-    "t09_pii_scrub",
-    "w12_countmin_heavyhitters",
-    "w01_tumbling",
-    "w02_sliding",
-    "w03_session_window",
-    "w04_enriched_windows",
-    "q63_forward_asof",
-    # green-r14 but file churned since
-    "d12_span_dedup",
-    "d13_quality_canonical",
-    "d14_lsh_admission",
-    "s08_ann_recall",
-    "s09_knn_graph",
-    "s10_pagerank",
-    "d15_semdedup",
-    "s11_cluster_quality",
-    "d16_span_scrub",
-    "d01_exact_dedup",
-    "d02_ngram_jaccard",
-    "d03_minhash_lsh",
-    "d04_simhash",
-    "d05_embedding_neardup",
-    "p03_sequence_packing",
-    "p08_flatten_mix",
-    "p09_incremental_refresh",
-    "p10_budget_select",
-    "p11_curriculum_stages",
-    "p12_temperature_mix",
-    "p13_pps_sample",
-    "w13_histogram_quantiles",
-    "t19_heaps_fit",
-    "t20_gopher_funnel",
-    "w14_decayed_rate",
-    "w15_hll_distinct",
-    "t21_tfidf_keywords",
-    "t22_langid_eval",
-    "t23_pmi_collocations",
-    "w16_profile_sketch",
-    "t10_char_entropy",
-    "q01_pricing_summary",
-    "q06_revenue_filter",
-    "q12_distinct_agg",
-    "q13_rollup",
-    "q41_map_fns",
-    "q64_weighted_quantiles",
-    "q65_running_distinct",
-    "q66_table_profile",
-    "q67_sequence_match",
-    "q68_interval_coverage",
-    "q27_approx_stats",
-    "q14_cube",
-    "q23_grouping_sets",
-    "q24_having",
-    "q28_sessionization",
-    "q08_topk_per_group",
-    "q09_running_sum",
-    "q10_lag_lead",
-    "q29_keep_first",
-]
-
-
 def all_queries() -> dict[str, Query]:
     """Merge every operator module's registry. Import here (not at module
     top) so a bug in one module doesn't take down the whole registry at
@@ -358,9 +153,4 @@ def all_queries() -> dict[str, Query]:
             if q.name in merged:
                 raise ValueError(f"duplicate query name: {q.name}")
             merged[q.name] = q
-    ordered: dict[str, Query] = {}
-    for name in _VERIFY_FIRST:
-        if name in merged:
-            ordered[name] = merged.pop(name)
-    ordered.update(merged)
-    return ordered
+    return merged

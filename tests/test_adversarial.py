@@ -42,7 +42,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from tests.oracle_harness import compare, duckdb_conn
+from tests.oracle_harness import KNOWN_VACUOUS, compare, duckdb_conn
 
 SRC = "/root/testdata/sf0.001"
 
@@ -474,44 +474,15 @@ def test_p04_p13_null_doc_id_parity(spark, tmp_path):
 
 # --- vacuous-mirror-green guard (r8 verdict, What's-wrong #3) ------------
 
-def _mirror_tool():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "local_oracle_mirror",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)),
-                     "tools", "local_oracle_mirror.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def test_vacuous_mirror_greens_have_nonempty_twins(
     spark, adv_dir, adv_ev_dir, tmp_path
 ):
-    """A mirror green with 0 Spark rows is `0 == 0` — it cannot
-    distinguish a correct operator from a degenerately-empty one. This
-    guard (a) pins that every zero-row green in the latest committed
-    mirror is a KNOWN_VACUOUS entry, and (b) proves each such query
-    NON-empty (and oracle-equal) on crafted data, so a query can never
-    be "covered" by emptiness alone."""
+    """An oracle green with 0 Spark rows is `0 == 0` — it cannot
+    distinguish a correct operator from a degenerately-empty one.
+    test_oracle_match only lets a KNOWN_VACUOUS query come back empty;
+    this proves each of them NON-empty (and oracle-equal) on crafted
+    data, so a query can never be "covered" by emptiness alone."""
     from kafka2clickhouse_py_streamer_spark.operators.base import all_queries
-
-    mirror = _mirror_tool()
-    _, art = mirror.latest_mirror()
-    if art is None:
-        pytest.skip("no LOCAL_ORACLE mirror recorded yet")
-    vacuous = {
-        n for n, r in art["results"].items()
-        if r.get("mode") == "oracle" and r.get("ok")
-        and r.get("spark_rows") == 0
-    }
-    unknown = vacuous - set(mirror.KNOWN_VACUOUS)
-    assert not unknown, (
-        f"zero-row mirror greens without a declared non-empty twin: "
-        f"{sorted(unknown)} — add to KNOWN_VACUOUS + this test's fixtures"
-    )
 
     # crafted fixture for q05: customers that genuinely have no orders
     q05_dir = str(tmp_path / "childless_customers")
@@ -534,7 +505,7 @@ def test_vacuous_mirror_greens_have_nonempty_twins(
 
     # crafted fixture for d05: two same-label, near-identical vectors
     # (the synthetic embeddings have no same-label pair over the 0.6
-    # cosine threshold at small SF — that's why its mirror green is 0==0)
+    # cosine threshold at small SF — that's why its oracle green is 0==0)
     d05_dir = str(tmp_path / "neardup_embeddings")
     os.makedirs(d05_dir)
     for p in glob.glob(os.path.join(SRC, "*.parquet")):
@@ -623,7 +594,7 @@ def test_vacuous_mirror_greens_have_nonempty_twins(
         "crafted_pre_order_events": q63_dir,
     }
     qs = all_queries()
-    for name, fixture in mirror.KNOWN_VACUOUS.items():
+    for name, fixture in KNOWN_VACUOUS.items():
         d = dirs[fixture]
         con = duckdb_conn(d)
         try:

@@ -63,7 +63,7 @@ def test_gate_flags_code_regression():
 
 def test_gate_refuses_anchorless_recordings():
     """A recording without host_calibration_sec (the driver's stdout
-    BENCH_r* wrap) is NOT evaluable — anchor-less adjudication is the
+    bench-result wrap) is NOT evaluable — anchor-less adjudication is the
     defect this gate replaces, so it must never silently pass."""
     v = gate.evaluate({"parsed": _rec(1.0, None)}, BASE)
     assert not v["evaluable"] and not v.get("within_gate", False)

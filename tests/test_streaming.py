@@ -3144,6 +3144,38 @@ def test_run_batch_accounting_exact_all_paths(
         _os.environ.pop("SPARK_GRAFT_DLQ_OVERLAP", None)
 
 
+def test_steady_trigger_scans_source_once(spark, tmp_path):
+    """The tagged per-trigger cache means every steady trigger reads its
+    source rows exactly once (numInputRows == rows in the file); only
+    the first trigger adds the pre-schema-fetch limit-1 probe's partial
+    scan. Across all triggers every fed row is delivered, DLQ'd, or
+    dropped."""
+    src = tmp_path / "in"
+    src.mkdir()
+    per_file = [GOOD] * 30 + [BAD] * 7 + ["", "{oops"]
+    for i in range(3):
+        with open(src / f"b{i}.txt", "w") as f:
+            f.write("\n".join(per_file))
+    stream = (
+        spark.readStream.option("maxFilesPerTrigger", 1)
+        .format("text")
+        .load(str(src))
+    )
+    sink, dlq = ListSink(), ListSink()
+    job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
+    q = job.start(stream, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        read = {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
+    finally:
+        q.stop()
+    n = len(per_file)
+    assert sorted(read) == [0, 1, 2]
+    assert n <= read[0] <= 2 * n
+    assert read[1] == read[2] == n
+    assert (len(sink.rows), len(dlq.rows)) == (3 * 30, 3 * 7)
+
+
 def test_empty_batch_after_schema_cached_skips_sinks(spark):
     """r9b moved the steady-state emptiness check onto the tagged
     cache probe (the first-trigger raw probe only covers the

@@ -154,3 +154,44 @@ def test_streaming_dedup_readmits_after_eviction(spark, tmp_path):
         assert len(h.rows) == 4  # re-admitted (state was evicted)
     finally:
         h.stop()
+
+
+@pytest.mark.parametrize(
+    "transform",
+    [
+        lambda s: dedup_within_watermark(s, ["event_id"], "1 hour"),
+        lambda s: tumbling_counts(s, "1 hour", "1 hour"),
+    ],
+    ids=["dedup", "window_agg"],
+)
+def test_state_plateaus_while_input_grows(spark, tmp_path, transform):
+    """State is bounded by the watermark horizon, not stream length:
+    eight hourly batches of fresh keys and event types, and Spark's own
+    state store evicts (numRowsRemoved fires) while numRowsTotal
+    stops growing once the horizon is full, even as cumulative input
+    keeps climbing."""
+    per_hour, hours = 20, 8
+    h = StreamHarness(spark, tmp_path, transform)
+    totals = []
+    try:
+        for hour in range(hours):
+            h.push([
+                ev(hour * per_hour + k,
+                   f"2024-01-01 {10 + hour:02d}:{k * 2:02d}:00",
+                   typ=f"type_{k % 5}")
+                for k in range(per_hour)
+            ])
+            op = h.query.lastProgress["stateOperators"][0]
+            totals.append(op["numRowsTotal"])
+        removed = sum(
+            p["stateOperators"][0]["numRowsRemoved"]
+            for p in h.query.recentProgress
+            if p["stateOperators"]
+        )
+    finally:
+        h.stop()
+    assert removed > 0, totals
+    # every hour feeds per_hour more rows, yet the last third holds no
+    # more state than the middle third
+    assert max(totals[5:]) <= max(totals[2:5]), totals
+    assert totals[-1] < hours * per_hour / 2, totals

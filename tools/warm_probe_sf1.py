@@ -15,9 +15,8 @@ precisely that rep 1 (cold-ish) inflates the median on a degraded
 host while the warm reps scale linearly.
 
 Writes ``BENCH_sf1_r{N}w.json`` with the standard BENCH_sf1 sections
-(sf0.1 / sf1 / scaling_ratio over the WARM medians) so
-tools/check_doc_metrics.py can verify ROUND*.md quotes against it,
-plus a ``rep_detail`` section with every raw sample.
+(sf0.1 / sf1 / scaling_ratio over the WARM medians), plus a
+``rep_detail`` section with every raw sample.
 """
 
 from __future__ import annotations
