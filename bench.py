@@ -136,8 +136,8 @@ def measure_anchors(spark) -> tuple[float, float]:
     return host_cal, round(sorted(shuf_samples)[1], 3)
 
 
-def warm_queries(spark, registry, names, sf_dir, passes: int = 2) -> None:
-    """Warm every plan ``passes`` times so the timed pass measures
+def warm_queries(spark, registry, names, sf_dir) -> None:
+    """Warm every plan twice so the timed pass measures
     steady state (plan + data, not first-touch JIT/planning). The
     reference is a continuously-running service, so steady state is
     the apples-to-apples number. One warm pass is not enough:
@@ -150,16 +150,16 @@ def warm_queries(spark, registry, names, sf_dir, passes: int = 2) -> None:
     otherwise accumulate dozens of live MEMORY_AND_DISK blocks before
     timing even starts — the executor-memory pressure behind r07's
     p14 recording 6.57 s (rep band [6.5, 11.9]) vs 4.1 s clean."""
-    for _ in range(passes):
+    for _ in range(2):
         for name in names:
             registry[name].fn(spark, sf_dir).count()
             spark.catalog.clearCache()
 
 
 def time_queries(
-    spark, registry, names, sf_dir, reps: int = 5
+    spark, registry, names, sf_dir
 ) -> tuple[dict[str, float], dict[str, list[float]]]:
-    """Median-of-``reps`` per query with cache hygiene: the host shows
+    """Median-of-5 per query with cache hygiene: the host shows
     2-3× wall-time variance across identical runs, and a single sample
     would grade noise, not the engine. CacheManager is cleared between
     reps (the two-pass offsets' DISK_ONLY persist is keyed by logical
@@ -167,6 +167,7 @@ def time_queries(
     median would measure cache-read cost) and after each query's last
     rep (cross-query memory-pressure bleed). Returns (medians,
     per-query [min, max] spreads)."""
+    reps = 5
     times: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     for name in names:
@@ -181,42 +182,6 @@ def time_queries(
         times[name] = round(samples[reps // 2], 3)
         spreads[name] = [round(samples[0], 3), round(samples[-1], 3)]
     return times, spreads
-
-
-# Longitudinal rotation outside the static headline list (round-12
-# verdict order 6): each round the sidecar additionally records
-# EXTRA_K non-headline registry queries, round-robin by registry
-# order keyed on the round number, so every heavy query outside the
-# 32 (p03, d15, s22, ...) re-earns wall-time evidence every
-# ceil(|registry - headline| / EXTRA_K) rounds without touching the
-# headline total the 2× gate reads (committed BENCH_SPREAD.json
-# history is the record).
-EXTRA_K = 6
-
-
-def select_extras(registry_names, round_no: int, k: int = EXTRA_K) -> list[str]:
-    """Deterministic rotation: the non-headline registry queries in
-    registry order, window ``k`` starting at ``(round_no * k) % n``
-    (wrapping). Pure function of (registry, round number) so the
-    selection is reproducible from the committed artifacts alone."""
-    pool = [n for n in registry_names if n not in set(HEADLINE)]
-    if not pool:
-        return []
-    start = (round_no * k) % len(pool)
-    return [pool[(start + i) % len(pool)] for i in range(min(k, len(pool)))]
-
-
-def _current_round() -> int:
-    """Round in progress = latest recorded CORRECTNESS round + 1."""
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(REPO_DIR, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0) + 1
 
 
 def gate_fields(times: dict[str, float], host_cal: float) -> dict:
@@ -286,19 +251,6 @@ def main() -> None:
     warm_queries(spark, registry, HEADLINE, sf_dir)
     times, spreads = time_queries(spark, registry, HEADLINE, sf_dir)
 
-    # the rotating longitudinal extras (sidecar-only; never in the
-    # headline total the gate reads). Only at the tracked scale —
-    # other scales never write the sidecar, so timing them there
-    # would be unrecorded work in the sf0.01 smoke loop.
-    extra_times: dict[str, float] = {}
-    extra_spreads: dict[str, list[float]] = {}
-    if sf_dir.rstrip("/").endswith("sf0.1"):
-        extras = select_extras(list(registry), _current_round())
-        warm_queries(spark, registry, extras, sf_dir, passes=1)
-        extra_times, extra_spreads = time_queries(
-            spark, registry, extras, sf_dir, reps=3
-        )
-
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
@@ -313,10 +265,6 @@ def main() -> None:
     # prebuilt two plus those the queries paid (phash, m08/CC labels,
     # plane counts, ...)
     sidecar["substrates"] = build_seconds()
-    if extra_times:
-        sidecar["extra_queries"] = extra_times
-        sidecar["extra_rep_spread"] = extra_spreads
-        sidecar["extra_round"] = _current_round()
     sidecar.update(gate_fields(times, host_cal))
     # The sidecar is the TRACKED median-of-3 record at the driver's
     # bench scale (sf0.1) — round notes quote it beside the driver run.

@@ -81,13 +81,6 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# A codec maps one raw payload to decoded (width, height). Injectable so
-# a cluster that HAS imaging libraries runs the identical operator with
-# a real decoder — only this per-payload function changes; the Spark
-# plan, Arrow batching, and output schema stay fixed.
-Codec = "Callable[[bytes], tuple[int, int]]"
-
-
 def fake_codec(payload: bytes) -> tuple[int, int]:
     """Deterministic stand-in decode (no imaging libs in this
     container): dimensions derived from the first payload bytes."""
@@ -617,10 +610,9 @@ PHASH_BAND_SPACE = 2 ** PHASH_BAND_BITS  # band-value space (65,536)
 # table (it IS the media near-dup index).
 def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, ph_hi, ph_lo): the 64-bit perceptual hash per media
-    item, carried as two non-negative 32-bit halves — m07's first
-    stage, factored out so the scale-receipt tool
-    (tools/receipt_graphs.py) measures the exact production frame.
-    Served from the ``"phash"`` session substrate (one build per
+    item, carried as two non-negative 32-bit halves — the first
+    stage of m07 and m08, factored out so both start from the same
+    frame. Served from the ``"phash"`` session substrate (one build per
     session and sf_dir).
 
     Features are the 64 nibbles of sha256 over the payload hex —
@@ -718,47 +710,6 @@ def _build_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold_word(half).alias("ph_hi"),
             threshold_word(0).alias("ph_lo"),
         )
-    )
-
-
-def phash_banded(hashed: DataFrame) -> DataFrame:
-    """(ph_hi, ph_lo, band_id, band_val) over DISTINCT hashes — m07's
-    banding stage, shared with the receipt tool so band-occupancy
-    counts measure the production layout. Band labeling matches the
-    shared :func:`banded_hamming_pairs` core with word_cols
-    ``['ph_hi', 'ph_lo']`` exactly (round-11 advice: the earlier
-    lo-first labeling here was a band-id permutation of the
-    production join, so per-band occupancy breakdowns from the
-    receipts were mislabeled): bands 0-1 slice ph_hi (low 16 bits
-    first), bands 2-3 slice ph_lo."""
-    half_bands = PHASH_BANDS // 2
-
-    def band_val(j: int) -> str:
-        # same layout as banded_hamming_pairs: word_cols[j // bands_
-        # per_word], shift (j % bands_per_word) * band_bits
-        word = "ph_hi" if j < half_bands else "ph_lo"
-        exp = PHASH_BAND_SPACE ** (j % half_bands)
-        return f"({word} div {exp}) % {PHASH_BAND_SPACE}"
-
-    return (
-        hashed.select("ph_hi", "ph_lo")
-        .distinct()
-        .select(
-            "ph_hi",
-            "ph_lo",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band_id"),
-                            F.expr(band_val(j)).alias("band_val"),
-                        )
-                        for j in range(PHASH_BANDS)
-                    ]
-                )
-            ).alias("b"),
-        )
-        .select("ph_hi", "ph_lo", "b.band_id", "b.band_val")
     )
 
 

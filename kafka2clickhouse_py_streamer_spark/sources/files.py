@@ -2,7 +2,7 @@
 
 Parquet is the primary batch source (columnar, predicate pushdown, column
 pruning — verify with ``df.explain`` that filters appear as
-``PushedFilters`` and the read schema is pruned). JSON/CSV readers take an
+``PushedFilters`` and the read schema is pruned). The JSON reader takes an
 explicit schema: schema inference is a full extra pass over 100 TB and is
 never acceptable in production paths.
 """
@@ -46,13 +46,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """JSON source with mandatory explicit schema (no inference pass)."""
     return spark.read.schema(schema).json(path)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType, header: bool = True
-) -> DataFrame:
-    """CSV source with mandatory explicit schema (no inference pass)."""
-    return spark.read.schema(schema).csv(path, header=header)
 
 
 def read_text(

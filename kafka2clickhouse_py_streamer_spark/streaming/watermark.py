@@ -110,28 +110,3 @@ def stream_stream_join(
     return joined.withColumn(
         "__k", F.coalesce(lw[key], rw[key])
     ).drop(lw[key]).drop(rw[key]).withColumnRenamed("__k", key)
-
-
-def sessionized(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked session windows per user (streaming twin of
-    w03_session_window); sessions merge while open, emit when the
-    watermark closes them."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )

@@ -8,8 +8,7 @@ tests pin the re-based gate's machinery:
   and refuses anchor-less recordings (the exact defect being closed);
 - the committed ``BASELINE_SUBSET.json`` carries all 11 subset walls,
   both anchors, and an internally-consistent normalized value;
-- ``bench.select_extras`` (the longitudinal headline rotation) is
-  deterministic, headline-disjoint, and cycles the whole pool.
+- ``bench.gate_fields`` embeds that verdict in the bench sidecar.
 """
 
 from __future__ import annotations
@@ -94,20 +93,6 @@ def test_committed_baseline_subset_is_anchored_and_consistent():
     assert self_v["within_gate"]
 
 
-def test_select_extras_deterministic_disjoint_and_cycling():
-    names = [f"x{i:03d}" for i in range(20)] + bench.HEADLINE
-    k = bench.EXTRA_K
-    a = bench.select_extras(names, 13, k)
-    assert a == bench.select_extras(names, 13, k)  # deterministic
-    assert not set(a) & set(bench.HEADLINE)  # never the headline set
-    assert len(a) == k
-    pool = [n for n in names if n not in set(bench.HEADLINE)]
-    covered = set()
-    for rnd in range(len(pool)):
-        covered |= set(bench.select_extras(names, rnd, k))
-    assert covered == set(pool)  # the rotation reaches everything
-
-
 def test_sidecar_gate_fields_self_adjudicate():
     """bench.gate_fields embeds the computed gate verdict in every
     sf0.1 sidecar once BASELINE_SUBSET.json exists — recording and
@@ -122,15 +107,3 @@ def test_sidecar_gate_fields_self_adjudicate():
     assert g["base_normalized"] == base["normalized"]
     # not evaluable (missing walls) → no fields, never a crash
     assert bench.gate_fields({"q01_pricing_summary": 1.0}, 1.0) == {}
-
-
-def test_select_extras_on_real_registry():
-    from kafka2clickhouse_py_streamer_spark.operators.base import (
-        all_queries,
-    )
-
-    names = list(all_queries())
-    extras = bench.select_extras(names, 13)
-    assert len(extras) == bench.EXTRA_K
-    assert not set(extras) & set(bench.HEADLINE)
-    assert set(extras) <= set(names)

@@ -6,6 +6,9 @@ and silently broke three queries that use NTZ-illegal expressions
 (unix_micros, cast-to-double). Pin the one invariant every event-time
 consumer relies on: ``table()`` always yields a plain session-TZ
 TIMESTAMP column on which those expressions analyze.
+
+Also here: the Spark-free checks on the scripts beside the package
+(bench.py's stdout line, and that every tools/ import resolves).
 """
 
 from __future__ import annotations
@@ -158,3 +161,47 @@ def test_sf1_amplification_decorrelates_replicas(spark, tmp_path):
         f"cross-replica pairs {cross} exceed single-replica organic "
         f"count {base}: the amplification remap has re-correlated"
     )
+
+
+def test_every_tool_import_resolves(monkeypatch):
+    """Tier-1 never runs the scripts under tools/ (the soaks take
+    minutes), so a deleted module they import would break them
+    silently. Resolve every absolute import in tools/*.py and bench.py,
+    module-level and function-local, with the repo root and tools/ on
+    sys.path as the scripts themselves arrange."""
+    import ast
+    import glob as _glob
+    import importlib.util
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tools = os.path.join(repo, "tools")
+    monkeypatch.syspath_prepend(repo)
+    monkeypatch.syspath_prepend(tools)
+
+    def resolves(module: str) -> bool:
+        try:
+            return importlib.util.find_spec(module) is not None
+        except ModuleNotFoundError:  # a missing parent package
+            return False
+
+    scripts = sorted(_glob.glob(os.path.join(tools, "*.py")))
+    scripts.append(os.path.join(repo, "bench.py"))
+    unresolved = []
+    for path in scripts:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                modules = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                modules = [node.module]
+            else:
+                continue
+            unresolved += [
+                f"{os.path.basename(path)}:{node.lineno} {m}"
+                for m in modules
+                if not resolves(m)
+            ]
+    assert len(scripts) > 1
+    assert not unresolved, unresolved

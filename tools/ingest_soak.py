@@ -1,14 +1,14 @@
 """Kill/replay soak of the PARITY ingest pipeline (PipelineJob).
 
-SOAK_r*.json proves kill/replay for the streaming corpus (RAG) path;
-this tool records the same receipt for the reference-parity pipeline
-itself — JSON decode → validate/DLQ split → typed cast → sink under
-`foreachBatch` with checkpointed offsets (reference main.py:525-526's
-at-least-once commit):
+tools/streaming_soak.py proves kill/replay for the streaming corpus
+(RAG) path; this tool checks the same property for the
+reference-parity pipeline itself — JSON decode → validate/DLQ split →
+typed cast → sink under `foreachBatch` with checkpointed offsets
+(reference main.py:525-526's at-least-once commit):
 
   1. feed N micro-batches of the seeded-fault telemetry corpus
-     (tools/ingest_throughput.build_corpus — ~2% malformed/missing/
-     tombstone rows so every routing path is live);
+     (build_corpus below — ~2% malformed/missing/tombstone rows so
+     every routing path is live);
   2. KILL the query after --kill-after commits, then erase the newest
      commit marker — the crash-between-foreachBatch-and-commit window
      (the streaming_soak.py hardening) — so the restart must REPLAY
@@ -37,9 +37,10 @@ overwrite semantics), and row conservation still holds exactly:
 valid + unique-DLQ + dropped == fed, with the reclassified rows
 counted on the DLQ side.
 
-Writes INGEST_SOAK_r{N}.json. Run:
+Prints the result as one JSON line on stdout and exits nonzero when
+any check fails. Run:
   python tools/ingest_soak.py [--rows 200000] [--kill-after 3]
-                              [--round 9b] [--drift-on-replay]
+                              [--drift-on-replay]
 """
 
 from __future__ import annotations
@@ -56,19 +57,70 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
-def expected_dlq(rows: int) -> int:
-    """Rows whose only fault is a missing required column (DLQ'd);
-    malformed JSON (i%97) wins the fault chain, tombstones (i%101)
-    lose to it — mirrors build_corpus's when-chain exactly."""
-    return sum(1 for i in range(rows) if i % 103 == 0 and i % 97 != 0)
+def build_corpus(spark, intake: str, rows: int, batch: int) -> None:
+    """Lay down ceil(rows/batch) parquet files partitioned by ``f`` —
+    with maxFilesPerTrigger=1 each trigger consumes one batch, the
+    file-stream twin of one poll over a 1-partition topic. File K
+    carries corpus ids [K*batch, (K+1)*batch)."""
+    from pyspark.sql import functions as F
+
+    n_files = (rows + batch - 1) // batch
+    base = spark.range(rows)
+    msg = F.to_json(
+        F.struct(
+            (F.col("id") % 100000).cast("int").alias("device_id"),
+            (F.col("id") * 7).alias("trip_id"),
+            (F.pmod(F.col("id"), 130) / F.lit(1.7)).alias("speed"),
+            (F.pmod(F.col("id"), 1000) / F.lit(997.0)).alias("score"),
+            (F.col("id") * 1001).alias("big_ctr"),
+            F.concat(F.lit("uuid-"), F.md5(F.col("id").cast("string"))).alias(
+                "device_uuid"
+            ),
+            F.concat(F.lit("evt_"), (F.col("id") % 40).cast("string")).alias(
+                "event_name"
+            ),
+            F.when(F.col("id") % 17 == 0, F.lit("invalid"))
+            .otherwise(F.lit("valid"))
+            .alias("gps_validity"),
+            F.when(F.col("id") % 2 == 0, F.lit("on"))
+            .otherwise(F.lit("off"))
+            .alias("incognito_mode"),
+            (F.col("id") % 2 + 1).cast("int").alias("mode_code"),
+            F.date_format(
+                F.timestamp_seconds(F.lit(1714550400) + F.col("id") % 86400),
+                "yyyy-MM-dd HH:mm:ss",
+            ).alias("event_ts"),
+            F.lit("2024-05-01").alias("event_date"),
+        )
+    )
+    # seeded fault fraction (~2%), same classes the reference handles:
+    # malformed JSON (dropped, main.py:402-407), missing required
+    # column (DLQ'd by the validator), empty payload (dropped
+    # tombstone, main.py:516-520). range_counts mirrors this chain.
+    value = (
+        F.when(F.col("id") % 97 == 0, F.concat(msg, F.lit("{truncated")))
+        .when(
+            F.col("id") % 103 == 0,
+            F.to_json(F.struct(F.lit(1).alias("trip_id"))),
+        )
+        .when(F.col("id") % 101 == 0, F.lit(""))
+        .otherwise(msg)
+    )
+    df = base.select(
+        value.alias("value"), (F.col("id") / batch).cast("long").alias("f")
+    )
+    df.repartition(n_files, "f").write.partitionBy("f").mode(
+        "overwrite"
+    ).parquet(intake)
 
 
 def range_counts(lo: int, hi: int) -> tuple[int, int, int]:
     """(valid, dlq, dropped) under the ORIGINAL schema for corpus ids
-    [lo, hi) — the per-batch twin of the global expectations."""
+    [lo, hi). Malformed JSON (i%97) wins the fault chain and is
+    dropped; a missing required column (i%103) is DLQ'd; an empty
+    tombstone (i%101) is dropped unless i%103 claimed it first."""
     dropped = sum(
         1 for i in range(lo, hi)
         if i % 97 == 0 or (i % 101 == 0 and i % 103 != 0)
@@ -83,7 +135,6 @@ def main() -> None:
     ap.add_argument("--batch", type=int, default=25_000)
     ap.add_argument("--kill-after", type=int, default=3,
                     help="stop after this many committed batches")
-    ap.add_argument("--round", type=str, default="9b")
     ap.add_argument("--drift-on-replay", action="store_true",
                     help="ALTER the sink schema (speed Float32->Int32) "
                          "between kill and resume; the replayed batch "
@@ -97,7 +148,7 @@ def main() -> None:
             f"{n_batches} batches"
         )
 
-    from ingest_throughput import CH_COLUMNS, build_corpus, expected_dropped
+    from perfbench.gen import CH_COLUMNS
 
     from kafka2clickhouse_py_streamer_spark.schema.clickhouse import (
         build_table_schema,
@@ -130,7 +181,7 @@ def main() -> None:
         out = os.path.join(work, "out")
         dlq_dir = os.path.join(work, "dlq")
         ckpt = os.path.join(work, "ckpt")
-        build_corpus(spark, intake, args.rows, args.batch, 1)
+        build_corpus(spark, intake, args.rows, args.batch)
 
         idem = idempotent_parquet_sink(out)
         current = {"bid": None}
@@ -250,9 +301,7 @@ def main() -> None:
         # ---- accounting ----
         valid_rows = read_idempotent(spark, out).count()
         dlq_rows = spark.read.parquet(dlq_dir).count()
-        dropped = expected_dropped(args.rows)
-        exp_dlq = expected_dlq(args.rows)
-        exp_valid = args.rows - exp_dlq - dropped
+        exp_valid, exp_dlq, dropped = range_counts(0, args.rows)
 
         bids = [b for b, _ in dlq_calls]
         replayed = sorted({b for b in bids if bids.count(b) == 2})
@@ -382,19 +431,7 @@ def main() -> None:
                 reclassified_error="data.speed must be integer",
                 drift_schema_fetches=drifted_provider.fetch_count,
             )
-        m = re.fullmatch(r"(\d+)([a-z]*)", args.round)
-        if not m:
-            raise SystemExit(f"bad --round tag: {args.round!r}")
-        tag = f"{int(m.group(1)):02d}{m.group(2)}"
-        path = os.path.join(REPO, f"INGEST_SOAK_r{tag}.json")
-        with open(path, "w") as fh:
-            json.dump(artifact, fh, indent=1)
-        print(
-            f"wrote {path}: {valid_rows} valid exactly-once, "
-            f"{dlq_rows} DLQ ({dup_rows} replay dups on batch "
-            f"{last_commit}), {dropped} dropped — accounting exact",
-            flush=True,
-        )
+        print(json.dumps(artifact), flush=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()

@@ -20,8 +20,9 @@ BASELINE.md defines the gate as
 evaluated by ``tools/baseline_gate.py`` — a computed boolean, host
 speed cancelled by construction.
 
-The r01 raw walls stay in BENCH_r01.json for history; they are simply
-no longer the gate base (they cannot be normalized retroactively).
+The r01 raw walls stay in BENCH_r01.json in git history; they are
+simply no longer the gate base (they cannot be normalized
+retroactively).
 
 Usage:
     python tools/rebase_baseline.py          # run + write artifact

@@ -13,21 +13,21 @@ with persisted offsets) through the REAL Structured Streaming machinery
   the fault-injection seam): one full micro-batch then streams over
   the mid-swap state, and the next maintenance call must roll the
   swap forward (r10 verdict item 8),
-- a recorded per-batch state-store size curve (fps/mass/checkpoint
-  bytes + file counts) — the artifact round 6's verdict asked for: a
-  claim of "replay-idempotent stateful streaming" backed by a recorded
-  run of system behavior, not only unit twins,
+- a per-batch state-store size curve (fps/mass/checkpoint bytes +
+  file counts): a claim of "replay-idempotent stateful streaming"
+  backed by a run of system behavior, not only unit twins,
 - the final twin check: the union of all streamed micro-batch outputs
   must equal the BATCH p19 composition (`chunk_dedup_pack`) over the
   same corpus, row for row.
 
-Writes ONE artifact: SOAK_r{N}.json (``--round`` picks N).
+Prints the result as one JSON line on stdout (progress goes to
+stderr) and exits nonzero when any check fails.
 
-Usage: python tools/streaming_soak.py [--round 7] [--batches 10]
+Usage: python tools/streaming_soak.py [--batches 10]
        [--kill-after 4] [--sf-dir /root/testdata/sf0.01]
 
-CAUTION (repo protocol): do not run concurrently with bench/probe/
-mirror — they fight for the same local[32] cores and skew timings.
+CAUTION: do not run concurrently with bench.py or perfbench — they
+fight for the same local cores and skew timings.
 """
 
 from __future__ import annotations
@@ -208,7 +208,6 @@ def ivf_index_soak(spark, sf_dir: str) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, default=7)
     ap.add_argument("--batches", type=int, default=10)
     ap.add_argument("--kill-after", type=int, default=4,
                     help="stop the query after this many committed "
@@ -301,7 +300,8 @@ def main() -> None:
             q.processAllAvailable()
             curve.append(sample("pre-kill", i, time.perf_counter() - t0))
             print(f"batch {i}: {curve[-1]['wall_sec']}s "
-                  f"fps={curve[-1]['fps_state']['bytes']}B", flush=True)
+                  f"fps={curve[-1]['fps_state']['bytes']}B",
+                  file=sys.stderr, flush=True)
             if i + 1 == args.kill_after:
                 q.stop()          # the KILL: stream dies mid-corpus
                 killed_at = i
@@ -355,7 +355,8 @@ def main() -> None:
     }
     print(f"replayed uncommitted batch {last_commit}: "
           f"idempotent={replay['idempotent']} "
-          f"({len(post_replay)} rows, {replay_wall}s)", flush=True)
+          f"({len(post_replay)} rows, {replay_wall}s)",
+          file=sys.stderr, flush=True)
     compaction = None  # set at killed_at + 2; the argparse guard above
     # guarantees that point is reached, but a None here must still
     # produce a valid (compaction-absent) artifact, not a NameError
@@ -366,7 +367,8 @@ def main() -> None:
             q.processAllAvailable()
             curve.append(sample("post-resume", i, time.perf_counter() - t0))
             print(f"batch {i} (resumed): {curve[-1]['wall_sec']}s "
-                  f"fps={curve[-1]['fps_state']['bytes']}B", flush=True)
+                  f"fps={curve[-1]['fps_state']['bytes']}B",
+                  file=sys.stderr, flush=True)
             if i == killed_at + 2:
                 # mid-soak maintenance with a KILL MID-FOLD (r10
                 # verdict item 8): the first compaction attempt dies
@@ -399,7 +401,7 @@ def main() -> None:
                 }
                 print(f"compaction killed mid-fold after batch {i} "
                       f"(state {fps_mid_swap['files']} files incl. "
-                      "temp)", flush=True)
+                      "temp)", file=sys.stderr, flush=True)
             if i == killed_at + 3 and compaction is not None:
                 # next maintenance call: recovery rolls forward, then
                 # folds whatever accreted since (the batch streamed
@@ -414,7 +416,8 @@ def main() -> None:
                 })
                 print(f"recovered + compacted {folded} fps "
                       f"partitions: {compaction['fps_before']['files']}"
-                      f" -> {fps_after['files']} files", flush=True)
+                      f" -> {fps_after['files']} files",
+                      file=sys.stderr, flush=True)
     finally:
         q.stop()
 
@@ -442,7 +445,7 @@ def main() -> None:
           f"probe_stable={ivf['probe_stable_over_mid_swap']} "
           f"twin={ivf['index_matches_batch_assignment']} "
           f"one_part_per_cell={ivf['one_compacted_partition_per_cell']}",
-          flush=True)
+          file=sys.stderr, flush=True)
 
     artifact = {
         "what": "streaming RAG-ingest soak: kill-and-resume + state "
@@ -463,12 +466,7 @@ def main() -> None:
         "rows_batch": len(batch),
         "ivf_index_compaction": ivf,
     }
-    dest = os.path.join(REPO, f"SOAK_r{args.round:02d}.json")
-    with open(dest, "w") as fh:
-        json.dump(artifact, fh, indent=1)
-    print(f"wrote {dest}: twin_equal={twin_equal} "
-          f"rows={len(streamed)}/{len(batch)} "
-          f"batches={n_batches_seen}")
+    print(json.dumps(artifact), flush=True)
     shutil.rmtree(work, ignore_errors=True)
     if not twin_equal or not replay["idempotent"]:
         sys.exit(1)
