@@ -17,34 +17,30 @@ should enrich. Within a batch, order is irrelevant (the carry sort
 puts same-instant dimensions before facts). This is exactly the
 guarantee a watermarked upstream provides.
 
-State/recovery contract (the corpus_stream module conventions):
+State/recovery contract (``streaming.state``):
 
 - Dimension partitions are ``batch_id=N`` under dynamic partition
   overwrite; enriched outputs are partitioned the same way — an
   at-least-once re-delivery overwrites BOTH its own partitions, and
-  because :func:`_read_prior_state` never reads the current batch's
+  because ``state.read_prior`` never reads the current batch's
   partition, a replay enriches against the identical version set.
 - State grows with dimension versions, not facts. The maintenance
-  step is :func:`compact_asof_state`: under a watermark ``w``, any
-  version that is neither the per-key LATEST at-or-before ``w`` nor
-  newer than ``w`` is dominated — no future fact (t ≥ w) can ever
-  pick it — so the fold keeps exactly the per-key SCD frontier.
-  Same crash-recoverable fold-and-swap as the sketch compactors.
+  step is ``state.compact(spark, state_dir, n, lambda s:
+  asof_frontier(s, w))``: under a watermark ``w``, any version that is
+  neither the per-key LATEST at-or-before ``w`` nor newer than ``w``
+  is dominated — no future fact (t ≥ w) can ever pick it — so the
+  fold keeps exactly the per-key SCD frontier, through the same
+  crash-recoverable fold-and-swap as every other persisted operator.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from kafka2clickhouse_py_streamer_spark.streaming.corpus_stream import (
-    COMPACTED_BATCH_ID,
-    _fold_and_swap,
-    _fs,
-    _list_foldable,
-    _read_prior_state,
-    _recover_compaction,
+from kafka2clickhouse_py_streamer_spark.streaming.state import (
+    read_prior,
+    write_batch,
 )
 
 # the interleaved stream's schema: dimension rows fill the o_* columns
@@ -71,71 +67,27 @@ def asof_enrich_batch(
         asof_carry_enrich,
     )
 
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     dims = batch_df.filter(F.col("is_event") == 0).select(*_DIM_COLS)
     facts = batch_df.filter(F.col("is_event") == 1).select(
         "event_id", "user_id", "ts"
     )
-    prior = _read_prior_state(spark, state_dir, batch_id)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     versions = (
         dims
         if prior is None
         else dims.unionByName(prior.select(*_DIM_COLS))
     )
-    enriched = asof_carry_enrich(facts, versions).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    enriched.write.mode("overwrite").partitionBy("batch_id").parquet(
-        out_dir
-    )
-    (
-        dims.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(state_dir)
-    )
+    write_batch(asof_carry_enrich(facts, versions), batch_id, out_dir)
+    write_batch(dims, batch_id, state_dir)
 
 
-def start_streaming_asof(
-    stream_df: DataFrame,
-    out_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Wire ``asof_enrich_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: asof_enrich_batch(df, bid, out_dir, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def compact_asof_state(
-    spark, state_dir: str, through_batch: int, watermark,
-    _crash_point: str | None = None,
-) -> int:
-    """Timeline maintenance: fold the dimension partitions up to
-    ``through_batch`` into ONE compacted partition holding only the
-    per-key SCD frontier under ``watermark``: every version newer
-    than the watermark, plus the single per-key winner at-or-before
-    it (max o_orderdate, ties to max o_orderkey — the EXACT pick
+def asof_frontier(state: DataFrame, watermark) -> DataFrame:
+    """The timeline fold for ``state.compact``: the per-key SCD
+    frontier of ``state`` under ``watermark`` — every version newer
+    than the watermark, plus the single per-key winner at-or-before it
+    (max o_orderdate, ties to max o_orderkey — the EXACT pick
     :func:`asof_carry_enrich` would make for any future fact, so
-    enrichment of facts with t ≥ watermark is provably unchanged).
-    Same safety contract and shared swap/recovery mechanics as the
-    sketch compactors. Returns the number of partitions removed."""
-    _recover_compaction(spark, state_dir)
-    jvm, fs, root = _fs(spark, state_dir)
-    old_parts = _list_foldable(fs, root, through_batch)
-    if not old_parts:
-        return 0
-
-    state = spark.read.parquet(state_dir).filter(
-        (F.col("batch_id") == COMPACTED_BATCH_ID)
-        | (F.col("batch_id") <= through_batch)
-    )
+    enrichment of facts with t ≥ watermark is provably unchanged)."""
     fresh = state.filter(F.col("o_orderdate") > F.lit(watermark))
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
@@ -146,9 +98,4 @@ def compact_asof_state(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    consolidated = fresh.unionByName(frontier).select(*_DIM_COLS)
-    _fold_and_swap(
-        spark, state_dir, consolidated, old_parts, through_batch,
-        _crash_point=_crash_point,
-    )
-    return len(old_parts)
+    return fresh.unionByName(frontier).select(*_DIM_COLS)

@@ -30,11 +30,11 @@ Scale + recovery notes:
   100 TB of corpus the state table is ~16 bytes x |unique docs|, a
   normal equi-join side; the anti-join prunes nothing from the stream
   scan but shuffles only digests.
-- Replay-safe by construction: both writes go to a ``batch_id=N``
-  partition under dynamic partition overwrite, and the state read
-  filters out the current ``batch_id``, so foreachBatch re-delivery
-  (the at-least-once contract after a restart from checkpoint)
-  overwrites its own partition instead of double-admitting.
+- Replay-safe by construction (``streaming.state``): every write goes
+  to a ``batch_id=N`` partition under dynamic partition overwrite, and
+  the state read filters out the current ``batch_id``, so foreachBatch
+  re-delivery (the at-least-once contract after a restart from
+  checkpoint) overwrites its own partition instead of double-admitting.
 - The micro-batch is persisted before the two writes so admission is
   computed once (micro-batches are bounded — the reference polls 25k
   rows/batch — so this pins one micro-batch, not the corpus).
@@ -43,31 +43,21 @@ Scale + recovery notes:
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka2clickhouse_py_streamer_spark.llm.text import scrub_pii
-
-
-def _read_prior_state(spark, state_dir: str, batch_id: int):
-    """Read the persisted state EXCLUDING the current batch's
-    partition. Returns None ONLY when the state path does not exist
-    yet (the first batch). A bare ``except AnalysisException`` would
-    also swallow schema errors — a state_dir misconfigured to point at
-    a DIFFERENT operator's state table would then silently degrade
-    every batch to first-batch behavior and re-admit duplicates — so
-    the guard is scoped to the missing-path error class and any other
-    failure propagates."""
-    try:
-        df = spark.read.parquet(state_dir)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in (exc.getCondition() or str(exc)):
-            return None
-        raise
-    return df.filter(F.col("batch_id") != F.lit(batch_id))
+from kafka2clickhouse_py_streamer_spark.streaming.state import (
+    COMPACTED_BATCH_ID,
+    _fs,
+    _partitions,
+    compact,
+    read_prior,
+    write_batch,
+)
 
 
 def dedup_admit_batch(
@@ -85,7 +75,6 @@ def dedup_admit_batch(
     property of THIS function, not of the stream wiring around it.
     """
     spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     fp = F.md5(F.col(text_col))
     keyed = batch_df.withColumn("fp", fp)
     keeper = F.min(id_col).over(Window.partitionBy("fp"))
@@ -94,48 +83,19 @@ def dedup_admit_batch(
         .filter(F.col(id_col) == F.col("_keeper"))
         .drop("_keeper")
     )
-    # replay safety: _read_prior_state never includes our own partition
-    state = _read_prior_state(spark, state_dir, batch_id)
+    # replay safety: read_prior never includes our own partition
+    state = read_prior(spark, state_dir, batch_id)
     if state is None:  # first batch: state path absent
         admitted = uniq
     else:
         admitted = uniq.join(state.select("fp"), "fp", "left_anti")
-    admitted = admitted.withColumn("batch_id", F.lit(batch_id)).persist()
+    admitted = admitted.persist()
     try:
         admitted.count()  # materialize once; both writes read the cache
-        (
-            admitted.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        (
-            admitted.select("fp", "batch_id")
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(admitted, batch_id, out_dir)
+        write_batch(admitted.select("fp"), batch_id, state_dir)
     finally:
         admitted.unpersist()
-
-
-def start_streaming_exact_dedup(
-    stream_df: DataFrame,
-    out_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> StreamingQuery:
-    """Wire ``dedup_admit_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: dedup_admit_batch(
-                df, bid, out_dir, state_dir, id_col=id_col, text_col=text_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def neardup_admit_batch(
@@ -168,7 +128,6 @@ def neardup_admit_batch(
     )
 
     spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bands = minhash_band_keys(batch_df, id_col=id_col, text_col=text_col)
     bucket_min = bands.groupBy("band_id", "band_key").agg(
         F.min(id_col).alias("bmin")
@@ -180,7 +139,7 @@ def neardup_admit_batch(
         .select(id_col)
         .distinct()
     )
-    state = _read_prior_state(spark, state_dir, batch_id)
+    state = read_prior(spark, state_dir, batch_id)
     if state is None:  # first batch: state path absent
         blocked = blocked_within
     else:
@@ -193,44 +152,15 @@ def neardup_admit_batch(
             .distinct()
         )
         blocked = blocked_within.union(blocked_state).distinct()
-    admitted = batch_df.join(blocked, id_col, "left_anti").withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    bands_out = bands.withColumn("batch_id", F.lit(batch_id)).persist()
+    bands = bands.persist()
     try:
-        bands_out.count()
-        (
-            admitted.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        bands.count()
+        write_batch(
+            batch_df.join(blocked, id_col, "left_anti"), batch_id, out_dir
         )
-        (
-            bands_out.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(bands, batch_id, state_dir)
     finally:
-        bands_out.unpersist()
-
-
-def start_streaming_neardup(
-    stream_df: DataFrame,
-    out_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> StreamingQuery:
-    """Wire ``neardup_admit_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: neardup_admit_batch(
-                df, bid, out_dir, state_dir, id_col=id_col, text_col=text_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+        bands.unpersist()
 
 
 def semdedup_admit_batch(
@@ -285,7 +215,6 @@ def semdedup_admit_batch(
         n_planes = MIN_PLANES
 
     spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     vec_d = to_double_vec("embedding")
     # persist the TAGGED frame itself (not a derived child): the
     # within-batch self-join reads it twice and the state probe a
@@ -300,7 +229,7 @@ def semdedup_admit_batch(
         .persist()
     )
     blocked_within = semdedup_pruned(tagged).select("vec_id")
-    state = _read_prior_state(spark, state_dir, batch_id)
+    state = read_prior(spark, state_dir, batch_id)
     if state is None:  # first batch: state path absent
         blocked = blocked_within
     else:
@@ -339,19 +268,9 @@ def semdedup_admit_batch(
         )
         blocked = blocked_within.union(blocked_state).distinct()
     try:
-        tagged_out = tagged.withColumn("batch_id", F.lit(batch_id))
-        admitted = tagged_out.join(blocked, "vec_id", "left_anti")
-        (
-            admitted.select("vec_id", "bucket", "batch_id")
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        (
-            tagged_out.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        admitted = tagged.join(blocked, "vec_id", "left_anti")
+        write_batch(admitted.select("vec_id", "bucket"), batch_id, out_dir)
+        write_batch(tagged, batch_id, state_dir)
     finally:
         tagged.unpersist()
 
@@ -391,8 +310,9 @@ def start_streaming_semdedup(
         )
     return (
         stream_df.writeStream.foreachBatch(
-            lambda df, bid: semdedup_admit_batch(
-                df, bid, out_dir, state_dir, n_planes=n_planes
+            partial(
+                semdedup_admit_batch,
+                out_dir=out_dir, state_dir=state_dir, n_planes=n_planes,
             )
         )
         .option("checkpointLocation", checkpoint_dir)
@@ -438,7 +358,6 @@ def rag_ingest_batch(
     from kafka2clickhouse_py_streamer_spark.llm.text import chunk_passages
 
     spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     fps_dir = os.path.join(state_dir, "fps")
     mass_dir = os.path.join(state_dir, "mass")
 
@@ -449,7 +368,7 @@ def rag_ingest_batch(
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    state = _read_prior_state(spark, fps_dir, batch_id)
+    state = read_prior(spark, fps_dir, batch_id)
     admitted = (
         uniq
         if state is None
@@ -464,7 +383,7 @@ def rag_ingest_batch(
     ).persist()
     try:
         kept.count()  # materialize once; packing + both states read it
-        prior_mass = _read_prior_state(spark, mass_dir, batch_id)
+        prior_mass = read_prior(spark, mass_dir, batch_id)
         local = chunk_pack_batch(
             kept.select("shard", "doc_id", "chunk_id", "n_chunk_tokens"),
             budget,
@@ -485,49 +404,18 @@ def rag_ingest_batch(
             goff.alias("stream_offset"),
             F.floor(goff / budget).cast("long").alias("pack_id"),
             (goff % budget).cast("long").alias("offset_in_pack"),
-            F.lit(batch_id).alias("batch_id"),
         )
-        packed.write.mode("overwrite").partitionBy("batch_id").parquet(
-            out_dir
-        )
-        (
-            kept.select("chunk_fp")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(fps_dir)
-        )
-        (
-            kept.groupBy("shard")
-            .agg(F.sum("n_chunk_tokens").cast("long").alias("mass"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(mass_dir)
+        write_batch(packed, batch_id, out_dir)
+        write_batch(kept.select("chunk_fp"), batch_id, fps_dir)
+        write_batch(
+            kept.groupBy("shard").agg(
+                F.sum("n_chunk_tokens").cast("long").alias("mass")
+            ),
+            batch_id,
+            mass_dir,
         )
     finally:
         kept.unpersist()
-
-
-def start_streaming_rag_ingest(
-    stream_df: DataFrame,
-    out_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    budget: int = 512,
-    n_shards: int = 4,
-) -> StreamingQuery:
-    """Wire ``rag_ingest_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: rag_ingest_batch(
-                df, bid, out_dir, state_dir,
-                budget=budget, n_shards=n_shards,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def index_ingest_batch(
@@ -572,37 +460,14 @@ def index_ingest_batch(
             "index_ingest_batch: empty centroid set — train centroids "
             "(s05's _train_centroids) before wiring the ingest stream"
         )
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     vec_d = to_double_vec("embedding")
     base = (
         valid_embeddings(batch_df, DIM)
         .select("vec_id", vec_d.alias("v"))
         .withColumn("norm", l2_norm(F.col("v")))
     )
-    tagged = _assign_cell_df(base, cents).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    (
-        tagged.write.mode("overwrite")
-        .partitionBy("cell", "batch_id")
-        .parquet(index_dir)
-    )
-
-
-def start_streaming_index_ingest(
-    stream_df: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    cents: dict[int, list[float]],
-) -> StreamingQuery:
-    """Wire ``index_ingest_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: index_ingest_batch(df, bid, index_dir, cents)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    write_batch(
+        _assign_cell_df(base, cents), batch_id, index_dir, by=("cell",)
     )
 
 
@@ -684,17 +549,17 @@ def compact_index(
     _crash_point: str | None = None,
 ) -> int:
     """Fold the streamed ANN index's per-batch partitions into one
-    compacted partition PER CELL — the index-maintenance twin of
-    ``compact_state``. ``index_ingest_batch`` lays the index out as
-    ``cell=X/batch_id=N``, so each cell directory is itself a
-    batch_id-partitioned table and the digest compactor's
-    crash-recoverable fold-and-swap applies verbatim per cell: a year
-    of 30 s micro-batches is ~1M tiny files per cell without this, and
-    probe queries then spend longer listing files than scanning them.
+    compacted partition PER CELL. ``index_ingest_batch`` lays the index
+    out as ``cell=X/batch_id=N``, so each cell directory is itself a
+    batch_id-partitioned table and ``state.compact``'s
+    crash-recoverable fold-and-swap (with a DISTINCT fold) applies
+    verbatim per cell: a year of 30 s micro-batches is ~1M tiny files
+    per cell without this, and probe queries then spend longer listing
+    files than scanning them.
 
-    Inherits `compact_state`'s whole safety contract per cell
-    (write-to-temp → marker → delete → rename; `_recover_compaction`
-    rolls an interrupted swap forward or back), and its operational
+    Each cell carries ``state.compact``'s whole safety contract
+    (write-to-temp → marker → delete → rename; an interrupted swap is
+    rolled forward or back on the next call), and its operational
     caveat: only compact batches the ingest stream's checkpoint has
     committed — a replay of a compacted batch would re-append rows the
     compacted partition already holds. Returns the total number of
@@ -702,29 +567,23 @@ def compact_index(
     compacted partition being re-folded does not count, so re-running
     over already-compacted cells reports 0).
 
-    ``_crash_point`` is the per-cell fault-injection seam passed down
-    to ``compact_state``: the first cell with foldable partitions dies
-    at the chosen point of ITS swap and the remaining cells go
-    untouched — the realistic partial-maintenance crash (one cell
-    mid-swap, the rest unfolded) the index soak arm injects; the next
-    ``compact_index`` call must recover that one cell and fold the
-    rest (tools/streaming_soak.py, round 12)."""
+    ``_crash_point`` is the per-cell fault-injection seam: the first
+    cell with foldable partitions dies at the chosen point of ITS swap
+    and the remaining cells go untouched — the realistic
+    partial-maintenance crash (one cell mid-swap, the rest unfolded)
+    the index soak arm injects; the next ``compact_index`` call must
+    recover that one cell and fold the rest (tools/streaming_soak.py)."""
     _, fs, root = _fs(spark, index_dir)
     removed = 0
     for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("cell="):
+        if not st.getPath().getName().startswith("cell="):
             continue
-        n_real = 0
-        for st2 in fs.listStatus(st.getPath()):
-            n2 = st2.getPath().getName()
-            if not n2.startswith("batch_id="):
-                continue
-            bid = int(n2.split("=", 1)[1])
-            if bid != COMPACTED_BATCH_ID and bid <= through_batch:
-                n_real += 1
-        compact_state(
-            spark, str(st.getPath()), through_batch,
+        n_real = sum(
+            p.getName() != f"batch_id={COMPACTED_BATCH_ID}"
+            for p in _partitions(fs, st.getPath(), through_batch)
+        )
+        compact(
+            spark, str(st.getPath()), through_batch, DataFrame.distinct,
             _crash_point=_crash_point if n_real else None,
         )
         removed += n_real
@@ -736,170 +595,3 @@ def scrub_stream(stream_df: DataFrame, text_col: str = "text") -> DataFrame:
     compose with any sink (``writeStream.format("parquet")`` in
     production; the twin test uses the memory sink)."""
     return scrub_pii(stream_df, text_col)
-
-
-COMPACTED_BATCH_ID = -1  # never collides with a real foreachBatch id
-
-
-_TMP_NAME = ".compact_tmp"
-_THROUGH_PREFIX = "_through_"
-
-
-def _fs(spark, state_dir):
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    return jvm, root.getFileSystem(spark._jsc.hadoopConfiguration()), root
-
-
-def _recover_compaction(spark, state_dir: str) -> str | None:
-    """Repair a compaction interrupted mid-swap. The temp fold dir
-    carries a ``_through_<N>`` marker written only AFTER the fold is
-    completely materialized, so recovery is unambiguous:
-
-    - marker present → roll FORWARD: the temp holds the full fold, so
-      delete whatever folded partitions remain (batch_id ≤ N or the
-      old compacted partition) and finish the rename.
-    - marker absent → roll BACK: the fold never completed and no
-      source partition was touched (deletes only happen after the
-      marker) — drop the temp.
-
-    Called at the top of every compaction; a crash at ANY point
-    therefore loses nothing (readers between the delete and the
-    rename see missing state until recovery runs — the documented
-    maintenance-window caveat, now recoverable instead of fatal)."""
-    jvm, fs, root = _fs(spark, state_dir)
-    tmp = jvm.org.apache.hadoop.fs.Path(state_dir, _TMP_NAME)
-    if not fs.exists(tmp):
-        return None
-    through = None
-    for st in fs.listStatus(tmp):
-        name = st.getPath().getName()
-        if name.startswith(_THROUGH_PREFIX):
-            through = int(name[len(_THROUGH_PREFIX):])
-    if through is None:  # incomplete fold: sources untouched
-        fs.delete(tmp, True)
-        return "back"
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("batch_id="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid == COMPACTED_BATCH_ID or bid <= through:
-            fs.delete(st.getPath(), True)
-    target = jvm.org.apache.hadoop.fs.Path(
-        state_dir, f"batch_id={COMPACTED_BATCH_ID}"
-    )
-    if not fs.rename(tmp, target):
-        raise RuntimeError(f"compaction recovery failed: {tmp} -> {target}")
-    return "forward"
-
-
-def _list_foldable(fs, root, through_batch: int):
-    parts = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("batch_id="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid == COMPACTED_BATCH_ID or bid <= through_batch:
-            parts.append(st.getPath())
-    return parts
-
-
-class CompactionCrash(RuntimeError):
-    """Raised by the fault-injection seam below — a deterministic
-    stand-in for the process dying at a chosen point of the swap, so
-    the soak (tools/streaming_soak.py) can kill a compaction mid-fold
-    against the LIVE stream state and prove recovery, not just the
-    unit-fixture recovery test."""
-
-
-def _fold_and_swap(
-    spark, state_dir: str, consolidated, old_parts, through_batch: int,
-    _crash_point: str | None = None,
-) -> None:
-    """Crash-recoverable partition swap shared by the digest compactor
-    (DISTINCT fold) and the sketch compactor (SUM fold):
-
-    1. materialize the fold to a dot-prefixed temp dir (invisible to
-       parquet listings — the read completes before any delete)
-    2. stamp the temp with ``_through_<N>`` — the commit point
-    3. delete the folded partitions
-    4. rename the temp in as ``batch_id=-1``
-
-    A crash before (2) touches nothing; after (2),
-    `_recover_compaction` rolls the swap forward from the temp's full
-    copy. The marker and ``_SUCCESS`` stay inside the final partition
-    dir — underscore-prefixed files are invisible to Spark's file
-    index."""
-    jvm, fs, root = _fs(spark, state_dir)
-    tmp = jvm.org.apache.hadoop.fs.Path(state_dir, _TMP_NAME)
-    fs.delete(tmp, True)
-    consolidated.write.mode("overwrite").parquet(str(tmp))
-    if _crash_point == "before_marker":  # fault-injection seam
-        raise CompactionCrash("injected crash before commit marker")
-    marker = jvm.org.apache.hadoop.fs.Path(
-        str(tmp), f"{_THROUGH_PREFIX}{through_batch}"
-    )
-    fs.create(marker, True).close()  # commit point
-    if _crash_point == "after_marker":  # fault-injection seam
-        raise CompactionCrash("injected crash after commit marker")
-    for p in old_parts:
-        fs.delete(p, True)
-    target = jvm.org.apache.hadoop.fs.Path(
-        state_dir, f"batch_id={COMPACTED_BATCH_ID}"
-    )
-    if not fs.rename(tmp, target):
-        raise RuntimeError(f"compaction swap failed: {tmp} -> {target}")
-
-
-def compact_state(
-    spark, state_dir: str, through_batch: int,
-    _crash_point: str | None = None,
-) -> int:
-    """Fold the per-batch state partitions up to ``through_batch`` into
-    ONE compacted partition (``batch_id=-1``) — the maintenance step
-    that keeps a long-running stream's state table from accreting one
-    small partition per micro-batch (the classic streaming small-files
-    problem: a year of 30 s batches is ~1M partitions; the claim/digest
-    JOIN side then spends longer listing files than joining).
-
-    Works on both state layouts (exact-dedup digests and near-dup band
-    claims): everything except ``batch_id`` is carried through a
-    DISTINCT (cross-batch duplicate claims collapse). Returns the
-    number of partitions removed.
-
-    Safety contract:
-    - COMPACTED_BATCH_ID (-1) never equals a real batch id, so the
-      admitters' ``batch_id != current`` replay filter keeps treating
-      compacted claims as prior state.
-    - Only compact batches the stream's CHECKPOINT HAS COMMITTED: a
-      replay re-delivers at most the batch after the last commit, and
-      that batch's partition is untouched, so self-exclusion still
-      works. Compacting an uncommitted batch would let a replayed doc
-      be blocked by its own claims.
-    - Run between micro-batches (or from a maintenance job while the
-      stream is stopped): the rewrite is write-to-temp → swap, but a
-      concurrent reader could list mid-swap.
-    """
-    _recover_compaction(spark, state_dir)
-    jvm, fs, root = _fs(spark, state_dir)
-    old_parts = _list_foldable(fs, root, through_batch)
-    if not old_parts:
-        return 0
-
-    state = spark.read.parquet(state_dir)
-    keep_cols = [c for c in state.columns if c != "batch_id"]
-    consolidated = (
-        state.filter(
-            (F.col("batch_id") == COMPACTED_BATCH_ID)
-            | (F.col("batch_id") <= through_batch)
-        )
-        .select(*keep_cols)
-        .distinct()
-    )
-    _fold_and_swap(
-        spark, state_dir, consolidated, old_parts, through_batch,
-        _crash_point=_crash_point,
-    )
-    return len(old_parts)

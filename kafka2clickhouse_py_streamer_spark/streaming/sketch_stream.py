@@ -11,38 +11,35 @@ IDENTICAL to running the batch sketch over the concatenated input
 boundaries fall — no ordering precondition, unlike the dedup/semdedup
 admitters (addition commutes; admission does not).
 
-State/recovery contract (the corpus_stream module conventions):
+State/recovery contract (``streaming.state``):
 
 - State partitions are ``batch_id=N`` under dynamic partition
   overwrite, so an at-least-once re-delivery overwrites its own
   partition instead of double-counting.
-- ``compact_state`` (corpus_stream) does NOT apply here — its
-  DISTINCT fold would collapse equal cell counts from different
-  batches. Sketch maintenance is :func:`compact_sketch_state` below:
-  the fold is the SUM-merge itself (cells re-aggregate to ≤ k·w rows),
-  run only over checkpoint-committed batches like its digest cousin.
+- Each sketch has ONE merge that takes a state ``DataFrame``
+  (:func:`merge_cells`, :func:`merge_hist`, :func:`merge_decayed`,
+  :func:`merge_registers`). The live read applies it to the whole
+  state table, and maintenance passes it as the fold of
+  ``state.compact`` — so the two cannot drift. A DISTINCT fold would
+  be wrong here: it collapses equal cell counts from different
+  batches.
 - At scale the state table is ≤ k·w rows per batch regardless of
   event volume (the map-side-combined sketch is the ONLY thing
   persisted), so a year of 30 s batches is ~1M tiny partitions —
-  exactly the small-files problem compact_sketch_state folds away.
+  exactly the small-files problem the compaction folds away.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from kafka2clickhouse_py_streamer_spark.streaming.batch_windows import (
     cm_bucket_pairs,
 )
-from kafka2clickhouse_py_streamer_spark.streaming.corpus_stream import (
-    COMPACTED_BATCH_ID,
-    _fold_and_swap,
-    _fs,
-    _list_foldable,
-    _read_prior_state,
-    _recover_compaction,
+from kafka2clickhouse_py_streamer_spark.streaming.state import (
+    read_prior,
+    write_batch,
 )
 
 
@@ -68,43 +65,18 @@ def countmin_update_batch(
     batch's k×w cell counts to its own ``batch_id`` partition
     (dynamic overwrite ⇒ replay-idempotent). No read of prior state is
     needed — merging happens at query time by summation."""
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        _batch_cells(batch_df.filter(F.col(key_col).isNotNull()), key_col)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(state_dir)
+    write_batch(
+        _batch_cells(batch_df.filter(F.col(key_col).isNotNull()), key_col),
+        batch_id,
+        state_dir,
     )
 
 
-def start_streaming_countmin(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-) -> StreamingQuery:
-    """Wire ``countmin_update_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: countmin_update_batch(
-                df, bid, state_dir, key_col=key_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def merged_sketch(spark, state_dir: str) -> DataFrame:
-    """The LIVE sketch: cell-wise sum over every persisted batch
-    partition — ≤ k·w rows."""
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("j", "bucket")
-        .agg(F.sum("cell").alias("cell"))
-    )
+def merge_cells(state: DataFrame) -> DataFrame:
+    """The count-min merge: cell-wise sum over state partitions — ≤ k·w
+    rows. Over the whole state table it is the LIVE sketch; as the
+    ``state.compact`` fold it is the compacted partition."""
+    return state.groupBy("j", "bucket").agg(F.sum("cell").alias("cell"))
 
 
 def countmin_estimates(
@@ -120,7 +92,7 @@ def countmin_estimates(
     # overestimate from the surviving subset (some absent).
     return (
         probes.join(
-            F.broadcast(merged_sketch(spark, state_dir)),
+            F.broadcast(merge_cells(spark.read.parquet(state_dir))),
             ["j", "bucket"],
             "left",
         )
@@ -148,43 +120,13 @@ def hist_update_batch(
         hist_cells,
     )
 
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        hist_cells(batch_df, value_col)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(state_dir)
-    )
+    write_batch(hist_cells(batch_df, value_col), batch_id, state_dir)
 
 
-def start_streaming_histogram(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    value_col: str = "value",
-) -> StreamingQuery:
-    """Wire ``hist_update_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: hist_update_batch(
-                df, bid, state_dir, value_col=value_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def merged_hist(spark, state_dir: str) -> DataFrame:
-    """The LIVE histogram: bin-wise sum over every persisted batch
-    partition — ≤ HIST_BINS rows."""
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+def merge_hist(state: DataFrame) -> DataFrame:
+    """The histogram merge: bin-wise sum over state partitions — ≤
+    HIST_BINS rows (the live histogram, or the compaction fold)."""
+    return state.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
 
 
 def hist_quantile_estimates(spark, state_dir: str) -> DataFrame:
@@ -196,72 +138,9 @@ def hist_quantile_estimates(spark, state_dir: str) -> DataFrame:
         hist_quantiles_from_cells,
     )
 
-    return hist_quantiles_from_cells(merged_hist(spark, state_dir))
-
-
-def compact_hist_state(
-    spark, state_dir: str, through_batch: int,
-    _crash_point: str | None = None,
-) -> int:
-    """Histogram maintenance: fold per-batch cell partitions up to
-    ``through_batch`` into ONE compacted partition by bin-wise SUM —
-    `compact_sketch_state`'s contract with the histogram's merge.
-    Returns the number of partitions removed."""
-    _recover_compaction(spark, state_dir)
-    jvm, fs, root = _fs(spark, state_dir)
-    old_parts = _list_foldable(fs, root, through_batch)
-    if not old_parts:
-        return 0
-
-    state = spark.read.parquet(state_dir)
-    consolidated = (
-        state.filter(
-            (F.col("batch_id") == COMPACTED_BATCH_ID)
-            | (F.col("batch_id") <= through_batch)
-        )
-        .groupBy("bin")
-        .agg(F.sum("cnt").alias("cnt"))
+    return hist_quantiles_from_cells(
+        merge_hist(spark.read.parquet(state_dir))
     )
-    _fold_and_swap(
-        spark, state_dir, consolidated, old_parts, through_batch,
-        _crash_point=_crash_point,
-    )
-    return len(old_parts)
-
-
-def compact_sketch_state(
-    spark, state_dir: str, through_batch: int,
-    _crash_point: str | None = None,
-) -> int:
-    """Sketch maintenance: fold the per-batch cell partitions up to
-    ``through_batch`` into ONE compacted partition by CELL-WISE SUM
-    (the sketch merge itself — corpus_stream.compact_state's DISTINCT
-    fold would wrongly collapse equal counts). Same safety contract:
-    only compact checkpoint-committed batches; the compacted partition
-    id (-1) never collides with a real batch. Swap mechanics (and
-    crash recovery) are the SHARED `_fold_and_swap` /
-    `_recover_compaction` pair in corpus_stream — only the fold
-    differs. Returns the number of partitions removed."""
-    _recover_compaction(spark, state_dir)
-    jvm, fs, root = _fs(spark, state_dir)
-    old_parts = _list_foldable(fs, root, through_batch)
-    if not old_parts:
-        return 0
-
-    state = spark.read.parquet(state_dir)
-    consolidated = (
-        state.filter(
-            (F.col("batch_id") == COMPACTED_BATCH_ID)
-            | (F.col("batch_id") <= through_batch)
-        )
-        .groupBy("j", "bucket")
-        .agg(F.sum("cell").alias("cell"))
-    )
-    _fold_and_swap(
-        spark, state_dir, consolidated, old_parts, through_batch,
-        _crash_point=_crash_point,
-    )
-    return len(old_parts)
 
 
 def decay_update_batch(
@@ -276,7 +155,7 @@ def decay_update_batch(
     different batches are NOT directly addable — each is relative to
     its own reference instant. But they re-reference exactly:
     mass@T = mass@t_ref × exp((t_ref − T)·k), so the merge is one
-    multiply per partition then a SUM (``merged_decayed``). Storing
+    multiply per partition then a SUM (``merge_decayed``). Storing
     per-batch-relative mass (instead of a fixed global epoch) is
     forced: exp(t·k) at absolute epoch-microsecond scale overflows
     doubles, which is exactly why decayed counters everywhere carry a
@@ -286,8 +165,6 @@ def decay_update_batch(
         decayed_cells,
     )
 
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ev = batch_df.filter(F.col("ts").isNotNull()).select(
         "ts", "event_type"
     )
@@ -295,37 +172,20 @@ def decay_update_batch(
     cells = decayed_cells(ev.crossJoin(F.broadcast(bounds))).crossJoin(
         F.broadcast(bounds)
     )
-    (
-        cells.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(state_dir)
-    )
+    write_batch(cells, batch_id, state_dir)
 
 
-def start_streaming_decay(
-    stream_df: DataFrame, state_dir: str, checkpoint_dir: str
-) -> StreamingQuery:
-    """Wire ``decay_update_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: decay_update_batch(df, bid, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def _re_reference(state: DataFrame, ref: DataFrame) -> DataFrame:
-    """Re-express every partition's decayed mass relative to the
-    one-row broadcast ``g_ref_us`` instant and merge per key — the
-    decayed-counter merge shared by the live read and the compactor
-    (one source, so they cannot drift)."""
+def merge_decayed(state: DataFrame) -> DataFrame:
+    """The decayed-counter merge: every partition's mass re-referenced
+    to the newest instant in ``state`` (which becomes the merged rows'
+    ``t_ref_us``), then summed per key — the live counters, or the
+    compaction fold."""
     from kafka2clickhouse_py_streamer_spark.streaming.batch_windows import (
         _DECAY_K,
     )
 
-    shifted = state.crossJoin(F.broadcast(ref)).select(
+    gref = state.agg(F.max("t_ref_us").alias("g_ref_us"))
+    shifted = state.crossJoin(F.broadcast(gref)).select(
         "event_type",
         "n_events",
         (
@@ -338,20 +198,13 @@ def _re_reference(state: DataFrame, ref: DataFrame) -> DataFrame:
                 * F.lit(_DECAY_K)
             )
         ).alias("mass"),
+        "g_ref_us",
     )
     return shifted.groupBy("event_type").agg(
         F.sum("n_events").cast("long").alias("n_events"),
         F.sum("mass").alias("decayed_raw"),
+        F.max("g_ref_us").alias("t_ref_us"),
     )
-
-
-def merged_decayed(spark, state_dir: str) -> DataFrame:
-    """The LIVE decayed counters: every persisted partition
-    re-referenced to the newest instant seen by ANY batch, then summed
-    per key — ≤ |event_type| × |partitions| rows ever touched."""
-    st = spark.read.parquet(state_dir)
-    gref = st.agg(F.max("t_ref_us").alias("g_ref_us"))
-    return _re_reference(st, gref)
 
 
 def decayed_rate_estimates(spark, state_dir: str) -> DataFrame:
@@ -360,7 +213,7 @@ def decayed_rate_estimates(spark, state_dir: str) -> DataFrame:
     (to FP re-referencing tolerance: exp(a)·exp(b) vs exp(a+b) differ
     in the last ulps; unlike the integer-cell sketches this twin is
     tolerance-exact, not bit-exact)."""
-    m = merged_decayed(spark, state_dir)
+    m = merge_decayed(spark.read.parquet(state_dir))
     return m.select(
         "event_type",
         "n_events",
@@ -369,38 +222,6 @@ def decayed_rate_estimates(spark, state_dir: str) -> DataFrame:
             F.col("decayed_raw") / F.col("n_events").cast("double"), 6
         ).alias("freshness"),
     ).orderBy("event_type")
-
-
-def compact_decay_state(
-    spark, state_dir: str, through_batch: int,
-    _crash_point: str | None = None,
-) -> int:
-    """Decayed-counter maintenance: fold the per-batch partitions up
-    to ``through_batch`` into ONE compacted partition by the
-    re-referencing merge itself (`_re_reference` to the folded
-    subset's newest instant, which becomes the compacted partition's
-    ``t_ref_us``). Same safety contract and shared swap/recovery
-    mechanics as the sketch compactors. Returns the number of
-    partitions removed."""
-    _recover_compaction(spark, state_dir)
-    jvm, fs, root = _fs(spark, state_dir)
-    old_parts = _list_foldable(fs, root, through_batch)
-    if not old_parts:
-        return 0
-
-    state = spark.read.parquet(state_dir).filter(
-        (F.col("batch_id") == COMPACTED_BATCH_ID)
-        | (F.col("batch_id") <= through_batch)
-    )
-    gref = state.agg(F.max("t_ref_us").alias("g_ref_us"))
-    consolidated = _re_reference(state, gref).crossJoin(
-        F.broadcast(gref.select(F.col("g_ref_us").alias("t_ref_us")))
-    )
-    _fold_and_swap(
-        spark, state_dir, consolidated, old_parts, through_batch,
-        _crash_point=_crash_point,
-    )
-    return len(old_parts)
 
 
 def hll_update_batch(
@@ -421,47 +242,20 @@ def hll_update_batch(
         hll_registers,
     )
 
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        hll_registers(batch_df, key_col=key_col, scope_col=scope_col)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(state_dir)
+    write_batch(
+        hll_registers(batch_df, key_col=key_col, scope_col=scope_col),
+        batch_id,
+        state_dir,
     )
 
 
-def start_streaming_hll(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    scope_col: str = "event_type",
-) -> StreamingQuery:
-    """Wire ``hll_update_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: hll_update_batch(
-                df, bid, state_dir, key_col=key_col, scope_col=scope_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def merged_hll(spark, state_dir: str) -> DataFrame:
-    """The LIVE register sketch: register-wise MAX over every
-    persisted batch partition — ≤ |scopes|·256 rows. MAX is
-    additionally idempotent (unlike the count-min SUM), so even a
-    duplicated partition could not corrupt the merge; the dynamic-
-    overwrite contract is still kept for state-size hygiene."""
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("scope", "reg")
-        .agg(F.max("r").alias("r"))
-    )
+def merge_registers(state: DataFrame) -> DataFrame:
+    """The HLL merge: register-wise MAX over state partitions — ≤
+    |scopes|·256 rows. MAX is additionally idempotent (unlike the
+    count-min SUM), so even a duplicated partition could not corrupt
+    the merge; the dynamic-overwrite contract is still kept for
+    state-size hygiene."""
+    return state.groupBy("scope", "reg").agg(F.max("r").alias("r"))
 
 
 def hll_distinct_estimates(spark, state_dir: str) -> DataFrame:
@@ -474,38 +268,9 @@ def hll_distinct_estimates(spark, state_dir: str) -> DataFrame:
         hll_estimates_from_registers,
     )
 
-    return hll_estimates_from_registers(merged_hll(spark, state_dir))
-
-
-def compact_hll_state(
-    spark, state_dir: str, through_batch: int,
-    _crash_point: str | None = None,
-) -> int:
-    """HLL maintenance: fold the per-batch register partitions up to
-    ``through_batch`` into ONE compacted partition by register-wise
-    MAX (the sketch merge itself). Same safety contract and shared
-    swap/recovery mechanics as the other sketch compactors. Returns
-    the number of partitions removed."""
-    _recover_compaction(spark, state_dir)
-    jvm, fs, root = _fs(spark, state_dir)
-    old_parts = _list_foldable(fs, root, through_batch)
-    if not old_parts:
-        return 0
-
-    state = spark.read.parquet(state_dir)
-    consolidated = (
-        state.filter(
-            (F.col("batch_id") == COMPACTED_BATCH_ID)
-            | (F.col("batch_id") <= through_batch)
-        )
-        .groupBy("scope", "reg")
-        .agg(F.max("r").alias("r"))
+    return hll_estimates_from_registers(
+        merge_registers(spark.read.parquet(state_dir))
     )
-    _fold_and_swap(
-        spark, state_dir, consolidated, old_parts, through_batch,
-        _crash_point=_crash_point,
-    )
-    return len(old_parts)
 
 
 def distinct_curve_batch(
@@ -531,9 +296,9 @@ def distinct_curve_batch(
     (scope, hour) combinations seen, so repeat-only hours still emit
     curve rows. Ordering contract (the admitters' class): cuts must
     respect event time, or a key's recorded first hour is the first
-    hour OF ITS ADMITTING BATCH."""
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    hour OF ITS ADMITTING BATCH. Compaction folds ``pairs`` with the
+    identity (rows are unique by admission) and ``grid`` with
+    DISTINCT."""
     ev = batch_df.filter(
         F.col(time_col).isNotNull() & F.col(key_col).isNotNull()
     ).select(
@@ -545,7 +310,7 @@ def distinct_curve_batch(
         F.min("h").alias("h")
     )
     pairs_dir = state_dir + "/pairs"
-    prior = _read_prior_state(spark, pairs_dir, batch_id)
+    prior = read_prior(batch_df.sparkSession, pairs_dir, batch_id)
     if prior is not None:
         p = prior.select(
             F.col("event_type").alias("p_et"),
@@ -557,37 +322,11 @@ def distinct_curve_batch(
             & (F.col("user_id") == F.col("p_uid")),
             "left_anti",
         )
-    (
-        firsts.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(pairs_dir)
-    )
-    (
-        ev.select("event_type", "h")
-        .distinct()
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(state_dir + "/grid")
-    )
-
-
-def start_streaming_distinct_curve(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-) -> StreamingQuery:
-    """Wire ``distinct_curve_batch`` under writeStream.foreachBatch."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: distinct_curve_batch(
-                df, bid, state_dir, **kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    write_batch(firsts, batch_id, pairs_dir)
+    write_batch(
+        ev.select("event_type", "h").distinct(),
+        batch_id,
+        state_dir + "/grid",
     )
 
 
@@ -608,34 +347,3 @@ def distinct_curve(spark, state_dir: str) -> DataFrame:
         .distinct()
     )
     return distinct_curve_frames(pairs, grid)
-
-
-def compact_distinct_curve_state(
-    spark, state_dir: str, through_batch: int,
-    _crash_point: str | None = None,
-) -> int:
-    """Curve maintenance: fold both state tables' per-batch partitions
-    up to ``through_batch`` into ONE compacted partition each — pairs
-    rows are unique (scope, key) by admission and grid folds by
-    DISTINCT, so both folds are plain re-partitions of their own
-    contract. Shared swap/recovery mechanics; returns partitions
-    removed across the two tables."""
-    removed = 0
-    for sub, dedup in (("/pairs", False), ("/grid", True)):
-        d = state_dir + sub
-        _recover_compaction(spark, d)
-        jvm, fs, root = _fs(spark, d)
-        old_parts = _list_foldable(fs, root, through_batch)
-        if not old_parts:
-            continue
-        state = spark.read.parquet(d).filter(
-            (F.col("batch_id") == COMPACTED_BATCH_ID)
-            | (F.col("batch_id") <= through_batch)
-        ).drop("batch_id")
-        consolidated = state.distinct() if dedup else state
-        _fold_and_swap(
-            spark, d, consolidated, old_parts, through_batch,
-            _crash_point=_crash_point,
-        )
-        removed += len(old_parts)
-    return removed

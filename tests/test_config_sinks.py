@@ -93,6 +93,31 @@ def test_engine_env_vars_are_the_allow_list():
     assert found == ENGINE_ENV_VARS
 
 
+def test_batch_state_protocol_has_one_owner():
+    """``streaming/state.py`` owns the replay-safe batch-partition
+    protocol: it alone names the dynamic partition-overwrite mode (as a
+    per-write option, never a session conf), and the other persisted
+    operators take the protocol from it, not from each other."""
+    import ast
+
+    import kafka2clickhouse_py_streamer_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    owners = {
+        str(f.relative_to(root))
+        for f in root.rglob("*.py")
+        if "partitionOverwriteMode" in f.read_text()
+    }
+    assert owners == {"streaming/state.py"}
+    for name in ("sketch_stream.py", "asof_stream.py"):
+        tree = ast.parse((root / "streaming" / name).read_text())
+        imported = {
+            n.module or "" for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+        }
+        assert not any(m.endswith("corpus_stream") for m in imported), name
+
+
 def test_session_tuning_confs_are_constants(spark):
     assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
     assert spark.conf.get(

@@ -8,7 +8,8 @@ consumer relies on: ``table()`` always yields a plain session-TZ
 TIMESTAMP column on which those expressions analyze.
 
 Also here: the Spark-free checks on the scripts beside the package
-(bench.py's stdout line, and that every tools/ import resolves).
+(bench.py's stdout line, and that every tools/ import and imported
+name resolves).
 """
 
 from __future__ import annotations
@@ -165,12 +166,16 @@ def test_sf1_amplification_decorrelates_replicas(spark, tmp_path):
 
 def test_every_tool_import_resolves(monkeypatch):
     """Tier-1 never runs the scripts under tools/ (the soaks take
-    minutes), so a deleted module they import would break them
-    silently. Resolve every absolute import in tools/*.py and bench.py,
-    module-level and function-local, with the repo root and tools/ on
-    sys.path as the scripts themselves arrange."""
+    minutes), so a deleted module or function they import would break
+    them silently. Resolve every absolute import in tools/*.py and
+    bench.py, module-level and function-local, with the repo root and
+    tools/ on sys.path as the scripts themselves arrange; for
+    ``from <module> import a, b`` where the module lives in this repo
+    (the package, perfbench, a sibling under tools/), require every
+    imported name too."""
     import ast
     import glob as _glob
+    import importlib
     import importlib.util
     import os
 
@@ -185,6 +190,19 @@ def test_every_tool_import_resolves(monkeypatch):
         except ModuleNotFoundError:  # a missing parent package
             return False
 
+    def missing_names(node) -> list[str]:
+        spec = importlib.util.find_spec(node.module)
+        if not (spec.origin or "").startswith(repo + os.sep):
+            return []
+        mod = importlib.import_module(node.module)
+        return [
+            f"{node.module}.{a.name}"
+            for a in node.names
+            if a.name != "*"
+            and not hasattr(mod, a.name)
+            and not resolves(f"{node.module}.{a.name}")
+        ]
+
     scripts = sorted(_glob.glob(os.path.join(tools, "*.py")))
     scripts.append(os.path.join(repo, "bench.py"))
     unresolved = []
@@ -198,10 +216,11 @@ def test_every_tool_import_resolves(monkeypatch):
                 modules = [node.module]
             else:
                 continue
+            bad = [m for m in modules if not resolves(m)]
+            if not bad and isinstance(node, ast.ImportFrom):
+                bad = missing_names(node)
             unresolved += [
-                f"{os.path.basename(path)}:{node.lineno} {m}"
-                for m in modules
-                if not resolves(m)
+                f"{os.path.basename(path)}:{node.lineno} {m}" for m in bad
             ]
     assert len(scripts) > 1
     assert not unresolved, unresolved

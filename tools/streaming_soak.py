@@ -7,8 +7,8 @@ with persisted offsets) through the REAL Structured Streaming machinery
 - a KILL mid-run (query stopped between commits) and a RESUME from the
   checkpoint that must continue — not restart — the stream,
 - a mid-soak state compaction of the fingerprint store (the additive
-  per-shard mass store is deliberately NOT folded: ``compact_state``'s
-  DISTINCT is correct for claim/digest layouts, not for summands) —
+  per-shard mass store is deliberately NOT folded: a DISTINCT fold is
+  correct for claim/digest layouts, not for summands) —
   KILLED MID-FOLD (after the commit marker, before delete/rename, via
   the fault-injection seam): one full micro-batch then streams over
   the mid-swap state, and the next maintenance call must roll the
@@ -39,6 +39,7 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
@@ -99,11 +100,13 @@ def ivf_index_soak(spark, sf_dir: str) -> dict:
     )
     from kafka2clickhouse_py_streamer_spark.operators.base import table
     from kafka2clickhouse_py_streamer_spark.streaming.corpus_stream import (
+        compact_index,
+        index_ingest_batch,
+        query_streamed_index,
+    )
+    from kafka2clickhouse_py_streamer_spark.streaming.state import (
         COMPACTED_BATCH_ID,
         CompactionCrash,
-        compact_index,
-        query_streamed_index,
-        start_streaming_index_ingest,
     )
 
     work = tempfile.mkdtemp(prefix="ivf_soak_")
@@ -139,7 +142,13 @@ def ivf_index_soak(spark, sf_dir: str) -> dict:
     stream = spark.readStream.schema(corpus.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = start_streaming_index_ingest(stream, idx, ckpt, cents)
+    q = (
+        stream.writeStream.foreachBatch(
+            partial(index_ingest_batch, index_dir=idx, cents=cents)
+        )
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
     out: dict = {"n_batches": n_batches, "n_corpus": len(ids)}
     try:
         for i in range(3):  # batches 0..2 committed
@@ -217,6 +226,7 @@ def main() -> None:
     ap.add_argument("--n-shards", type=int, default=4)
     args = ap.parse_args()
 
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from kafka2clickhouse_py_streamer_spark.llm.sampling import (
@@ -225,9 +235,11 @@ def main() -> None:
     from kafka2clickhouse_py_streamer_spark.operators.base import table
     from kafka2clickhouse_py_streamer_spark.session import get_spark
     from kafka2clickhouse_py_streamer_spark.streaming.corpus_stream import (
+        rag_ingest_batch,
+    )
+    from kafka2clickhouse_py_streamer_spark.streaming.state import (
         CompactionCrash,
-        compact_state,
-        start_streaming_rag_ingest,
+        compact,
     )
 
     spark = get_spark(app_name="streaming_soak")
@@ -267,9 +279,15 @@ def main() -> None:
         stream = spark.readStream.schema(
             "doc_id long, text string"
         ).option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_rag_ingest(
-            stream, out, state, ckpt,
-            budget=args.budget, n_shards=args.n_shards,
+        return (
+            stream.writeStream.foreachBatch(
+                partial(
+                    rag_ingest_batch, out_dir=out, state_dir=state,
+                    budget=args.budget, n_shards=args.n_shards,
+                )
+            )
+            .option("checkpointLocation", ckpt)
+            .start()
         )
 
     def feed(i: int) -> None:
@@ -385,8 +403,8 @@ def main() -> None:
                 fps_before = dir_stats(fps_dir)
                 crashed = False
                 try:
-                    compact_state(
-                        spark, fps_dir, i - 1,
+                    compact(
+                        spark, fps_dir, i - 1, DataFrame.distinct,
                         _crash_point="after_marker",
                     )
                 except CompactionCrash:
@@ -407,7 +425,9 @@ def main() -> None:
                 # folds whatever accreted since (the batch streamed
                 # OVER the mid-swap state)
                 fps_dir = os.path.join(state, "fps")
-                folded = compact_state(spark, fps_dir, i - 1)
+                folded = compact(
+                    spark, fps_dir, i - 1, DataFrame.distinct
+                )
                 fps_after = dir_stats(fps_dir)
                 compaction.update({
                     "recovered_after_batch": i,
