@@ -1,7 +1,3 @@
-from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-    cast_project,
-    process_batch,
-    validate_split,
-)
+from kafka2clickhouse_py_streamer_spark.pipeline.core import process_batch
 
-__all__ = ["cast_project", "process_batch", "validate_split"]
+__all__ = ["process_batch"]

@@ -8,14 +8,16 @@ Spark-first — no code is translated):
   / malformed-JSON messages are silently dropped.
 - P2 validate-split (main.py:200-228): each row either passes the
   sink-schema validation or is routed to the DLQ frame carrying
-  ``{'row': <original>, 'error': <message>}``.
-- P3 cast-project (main.py:230-302): one fused ``select`` casting every
-  surviving row to exactly the sink schema — null/missing values replaced
-  by per-type sentinel defaults (main.py:116-132), empty-string and
-  unparseable datetimes → 1970-01-01 (main.py:267-273), string-enum
-  nulls → "DEFAULT" (main.py:275-281), missing columns materialized from
-  their defaults (main.py:296-298), extra fields dropped by projection
-  (main.py:302).
+  ``{'row': <original>, 'error': <message>}`` (:func:`tag_errors`,
+  :func:`split_tagged`).
+- P3 cast-project (main.py:230-302): :func:`typed_valid`, one fused
+  ``select`` casting every surviving row to exactly the sink schema —
+  null/missing values replaced by per-type sentinel defaults
+  (main.py:116-132), empty-string and unparseable datetimes → 1970-01-01
+  (main.py:267-273), string-enum nulls → "DEFAULT" (main.py:275-281),
+  missing keys filled from their defaults (main.py:296-298), extra
+  fields dropped by projection (main.py:302). The batch API and every
+  streaming trigger build the typed frame through it.
 
 Architecture: P1+P2 need per-field JSON *type* checking — "is 5 vs
 '5'" — i.e. the raw token's JSON class. That is ONE Arrow-batched
@@ -33,12 +35,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DateType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DateType, StringType, StructField, StructType
 
 from kafka2clickhouse_py_streamer_spark.schema.model import ColumnMeta, TableSchema
 from kafka2clickhouse_py_streamer_spark.session import substrate
@@ -48,28 +45,15 @@ from kafka2clickhouse_py_streamer_spark.session import substrate
 _DROP = "\x00DROP"
 
 
-def _json_class_type(meta: ColumnMeta):
-    """Spark type used to *receive* the raw JSON value before P3 casts it.
-
-    Mirrors ch_type_to_json_schema (main.py:62-91): integers arrive as
-    JSON ints (LongType is wide enough to receive any sane input; the
-    UInt64 sentinel path widens later in P3), numbers as doubles →
-    received as StringType so P3's try_cast sees the exact token (Spark's
-    from_json would round-trip doubles fine, but strings are uniform and
-    let P3 own ALL casting), dates as strings, enums as string-or-int →
-    StringType (Jackson renders numeric tokens as their text).
-    """
-    return StringType()
-
-
 def receiving_schema(schema: TableSchema) -> StructType:
     """All-string receiving schema: from_json extracts raw tokens, P3
-    casts. A number arriving as 1.5 parses to "1.5"; explicit JSON null
-    parses to SQL NULL; absent keys parse to SQL NULL too — P2 has
-    already split on the present-vs-absent distinction, so P3 can treat
-    both as "use the sentinel default"."""
+    casts. A number arriving as 1.5 parses to "1.5" (Jackson renders
+    numeric tokens as their text), so P3 owns ALL casting and sees the
+    exact token; explicit JSON null and absent keys both parse to SQL
+    NULL — P2 has already split on the present-vs-absent distinction,
+    so P3 treats both as "use the sentinel default"."""
     return StructType(
-        [StructField(c.name, _json_class_type(c), True) for c in schema.columns]
+        [StructField(c.name, StringType(), True) for c in schema.columns]
     )
 
 
@@ -175,7 +159,8 @@ def tag_errors(
     substrate. The streaming shell calls tag_errors once per TRIGGER;
     without it every micro-batch re-pickles the validator closure and
     registers a fresh JVM UDF — pure driver-side fixed cost at high
-    trigger rates (THROUGHPUT_r08's parity_1p regime). The registry's
+    trigger rates (the parity_1p regime of ``git show
+    6969692:THROUGHPUT_r08.json``). The registry's
     applicationId scoping means a restarted session can't see stale
     JVM refs.
 
@@ -226,20 +211,6 @@ def split_tagged(
     return valid, dlq
 
 
-def validate_split(
-    raw_df: DataFrame, schema: TableSchema, value_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """P1+P2: split raw JSON messages into (valid_raw, dlq).
-
-    ``valid_raw`` keeps the original message column (P3 parses it);
-    ``dlq`` carries ``row`` (original message text) + ``error`` — the
-    Spark shape of the reference's ``{'row': …, 'error': …}`` records
-    (main.py:227). Empty/whitespace/malformed messages appear in
-    neither (main.py:516-520).
-    """
-    return split_tagged(tag_errors(raw_df, schema, value_col), value_col)
-
-
 # exactly the strings Spark's ANSI string→integral cast accepts:
 # optional [\x00-\x20] padding (UTF8String.trimAll), optional sign,
 # ASCII digits. try_cast on a NON-matching string raises-and-swallows
@@ -256,29 +227,16 @@ def validate_split(
 # DESIGNED steady state. Plain integer columns can only miss on
 # tokens the validator already DLQ'd (wrong JSON class never reaches
 # P3), so misses there are rare and the guard's rlike would be a ~10%
-# pure tax on the succeed path (measured, THROUGHPUT_r09 A/B).
+# pure tax on the succeed path (measured; SCALE.md, "Micro-batch
+# trigger anatomy (round 9)").
 _INTEGRAL_TOKEN = r"^[\x00-\x20]*[+-]?[0-9]+[\x00-\x20]*$"
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
-def _cast_expr(
-    meta: ColumnMeta,
-    present: bool,
-    from_string: bool = False,
-    source=None,
-):
-    """P3 for one column (main.py:260-302), as a Column expression.
-
-    ``from_string``: the input column is known to be STRING (the
-    receiving-schema path) — enables the exception-free integral guard,
-    which is only analyzable/meaningful on string input.
-    ``source``: Column holding the raw value (defaults to the meta's
-    own name; the fused streaming shape passes a struct field ref)."""
+def _cast_expr(meta: ColumnMeta, col):
+    """P3 for one column (main.py:260-302), as a Column expression over
+    ``col``, the column's raw STRING token."""
     t = meta.spark_type
-    if not present:
-        # missing column → lit(default) (main.py:296-298)
-        return F.lit(meta.default).cast(t).alias(meta.name)
-    col = F.col(meta.name) if source is None else source
     if meta.is_datetime:
         # ''→default; unparseable→null→default (main.py:267-273)
         parsed = F.try_to_timestamp(F.nullif(col, F.lit("")))
@@ -288,11 +246,7 @@ def _cast_expr(
     elif meta.is_string_enum:
         # null → "DEFAULT" (main.py:275-281)
         expr = F.coalesce(col.cast(StringType()), F.lit("DEFAULT"))
-    elif (
-        from_string
-        and meta.json_type == "enum"
-        and t.simpleString() in _INTEGRAL_TYPES
-    ):
+    elif meta.json_type == "enum" and t.simpleString() in _INTEGRAL_TYPES:
         # fail-soft cast with the exception-free miss path
         expr = F.coalesce(
             F.when(col.rlike(_INTEGRAL_TOKEN), col.try_cast(t)),
@@ -304,28 +258,10 @@ def _cast_expr(
     return expr.alias(meta.name)
 
 
-def cast_project(parsed_df: DataFrame, schema: TableSchema) -> DataFrame:
-    """P3: one fused select casting to exactly the sink schema — drops
-    extras, orders columns, fills sentinels (main.py:230-302)."""
-    strings = {n for n, dt in parsed_df.dtypes if dt == "string"}
-    present = set(parsed_df.columns)
-    return parsed_df.select(
-        *[
-            _cast_expr(c, c.name in present, from_string=c.name in strings)
-            for c in schema.columns
-        ]
-    )
-
-
 def receiving_transform(spark, schema: TableSchema, value_col: str) -> tuple:
-    """Cached (parse Column, cast Columns) for the receiving-schema
-    pipeline shape (every sink column present, received as STRING).
-    ``valid.select(parse.alias('_parsed')).select(*casts)`` ≡
-    from_json + cast_project for this shape — two Dataset ops total
-    (each op is an EAGER analysis pass in Spark; the streaming shell
-    pays this per trigger, so the fused form is also the cheap form).
-    The cast Columns read their input through ``_parsed.<name>`` field
-    refs so the struct is expanded and cast in one projection.
+    """Cached (parse Column, cast Columns) for :func:`typed_valid`. The
+    cast Columns read their input through ``_parsed.<name>`` field refs
+    so the struct is expanded and cast in one projection.
 
     A "plan_frag" session substrate per (fingerprint, value_col):
     Column objects are unresolved expression trees — reusable across
@@ -335,12 +271,7 @@ def receiving_transform(spark, schema: TableSchema, value_col: str) -> tuple:
     def build() -> tuple:
         parse = F.from_json(F.col(value_col), receiving_schema(schema))
         casts = [
-            _cast_expr(
-                c,
-                True,
-                from_string=True,
-                source=F.col("_parsed").getField(c.name),
-            )
+            _cast_expr(c, F.col("_parsed").getField(c.name))
             for c in schema.columns
         ]
         return parse, casts
@@ -350,14 +281,31 @@ def receiving_transform(spark, schema: TableSchema, value_col: str) -> tuple:
     )
 
 
+def typed_valid(
+    tagged: DataFrame, schema: TableSchema, value_col: str = "value"
+) -> DataFrame:
+    """P3 over a tagged frame: its valid rows cast to exactly the sink
+    schema. Three Dataset ops — filter → parse → cast-expand — because
+    each op is an EAGER analysis pass and the streaming shell pays this
+    per trigger."""
+    parse, casts = receiving_transform(tagged.sparkSession, schema, value_col)
+    return (
+        tagged.filter(F.col("_err").isNull())
+        .select(parse.alias("_parsed"))
+        .select(*casts)
+    )
+
+
 def process_batch(
     raw_df: DataFrame, schema: TableSchema, value_col: str = "value"
 ) -> tuple[DataFrame, DataFrame]:
     """The batch-mode pipeline API (reference `process_packets`,
     main.py:394-466, minus the sink/retry shell — see streaming/job.py):
-    raw messages → (typed valid frame, DLQ frame)."""
-    valid_raw, dlq = validate_split(raw_df, schema, value_col)
-    parsed = valid_raw.withColumn(
-        "_parsed", F.from_json(F.col(value_col), receiving_schema(schema))
-    ).select("_parsed.*")
-    return cast_project(parsed, schema), dlq
+    raw messages → (typed valid frame, DLQ frame). The DLQ frame carries
+    ``row`` (original message text) + ``error``, the Spark shape of the
+    reference's ``{'row': …, 'error': …}`` records (main.py:227);
+    empty/whitespace/malformed messages appear in neither
+    (main.py:516-520)."""
+    tagged = tag_errors(raw_df, schema, value_col)
+    _, dlq = split_tagged(tagged, value_col)
+    return typed_valid(tagged, schema, value_col), dlq

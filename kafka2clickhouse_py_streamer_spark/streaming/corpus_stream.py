@@ -51,9 +51,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kafka2clickhouse_py_streamer_spark.llm.text import scrub_pii
 from kafka2clickhouse_py_streamer_spark.streaming.state import (
-    COMPACTED_BATCH_ID,
     _fs,
-    _partitions,
     compact,
     read_prior,
     write_batch,
@@ -563,9 +561,9 @@ def compact_index(
     caveat: only compact batches the ingest stream's checkpoint has
     committed — a replay of a compacted batch would re-append rows the
     compacted partition already holds. Returns the total number of
-    per-batch partitions removed across all cells (a pre-existing
-    compacted partition being re-folded does not count, so re-running
-    over already-compacted cells reports 0).
+    per-batch partitions removed across all cells (a cell holding only
+    its compacted partition is left untouched, so re-running over
+    already-compacted cells reports 0).
 
     ``_crash_point`` is the per-cell fault-injection seam: the first
     cell with foldable partitions dies at the chosen point of ITS swap
@@ -574,20 +572,14 @@ def compact_index(
     the index soak arm injects; the next ``compact_index`` call must
     recover that one cell and fold the rest (tools/streaming_soak.py)."""
     _, fs, root = _fs(spark, index_dir)
-    removed = 0
-    for st in fs.listStatus(root):
-        if not st.getPath().getName().startswith("cell="):
-            continue
-        n_real = sum(
-            p.getName() != f"batch_id={COMPACTED_BATCH_ID}"
-            for p in _partitions(fs, st.getPath(), through_batch)
-        )
+    return sum(
         compact(
             spark, str(st.getPath()), through_batch, DataFrame.distinct,
-            _crash_point=_crash_point if n_real else None,
+            _crash_point=_crash_point,
         )
-        removed += n_real
-    return removed
+        for st in fs.listStatus(root)
+        if st.getPath().getName().startswith("cell=")
+    )
 
 
 def scrub_stream(stream_df: DataFrame, text_col: str = "text") -> DataFrame:

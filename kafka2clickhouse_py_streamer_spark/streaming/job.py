@@ -20,6 +20,9 @@ Reference parity (re-expressed on Structured Streaming):
   Invalid: m" before the insert): the per-trigger count job below is
   that same step, and doubles as the emptiness check plus the exact
   DLQ-write sizing.
+- DLQ push (main.py:458-462): the reference pushes invalid rows after
+  the insert; here the DLQ write runs concurrently with the insert
+  (see :meth:`PipelineJob._deliver`).
 
 The sink is a plain callable — no Catalyst extension needed (SURVEY.md
 §4). A ClickHouse-compatible deployment passes a JDBC writer with the
@@ -29,24 +32,28 @@ writers.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 from typing import Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka2clickhouse_py_streamer_spark.pipeline.core import (
+    dlq_condition,
+    split_tagged,
+    tag_errors,
+    typed_valid,
+)
 from kafka2clickhouse_py_streamer_spark.schema.model import TableSchema
 
 # DLQ writes at or below this row count collapse to ONE task
-# (repartition(1), not coalesce — see _write_dlq): a micro-batch DLQ
+# (repartition(1), not coalesce — see _send_dlq): a micro-batch DLQ
 # split is a per-trigger minority, and |partitions| tiny files/commits
 # per trigger is the pathology. 500k rows × ~200 B/record ≈ 100 MB —
 # comfortably one task's work — while anything larger keeps the full
-# write width. One policy for BOTH delivery arms (happy path and
-# drift-retry) so the collapse behavior cannot drift between them.
+# write width.
 DLQ_SINGLE_TASK_MAX_ROWS = 500_000
 
 # Session conf keys PipelineJob.start turns off for its own query only.
@@ -69,7 +76,12 @@ Sink = Callable[[DataFrame], None]
 class PipelineJob:
     """validate → cast → sink, with DLQ + drift retry. The foreachBatch
     body is exposed as :meth:`run_batch` so batch mode and tests share
-    the exact code path (SURVEY.md §3.2)."""
+    the exact code path (SURVEY.md §3.2).
+
+    Within a trigger the valid sink and the DLQ sink may be called
+    concurrently from two threads. Every sink in ``sinks.py`` is safe
+    under that: each call issues its own write, and
+    ``clickhouse_connect_sink`` opens its own client."""
 
     def __init__(
         self,
@@ -84,9 +96,9 @@ class PipelineJob:
         self._value_col = value_col
         self._schema: TableSchema | None = None  # driver-side cache
         # ONE worker reused across triggers for the valid-plan build
-        # and the overlapped DLQ write (see _run_overlapped): a fresh
-        # Thread per trigger would churn a py4j connection per batch in
-        # a long-running service. No thread starts until the first
+        # and the overlapped DLQ write (see _deliver): a fresh Thread
+        # per trigger would churn a py4j connection per batch in a
+        # long-running service. No thread starts until the first
         # submit.
         self._dlq_pool = ThreadPoolExecutor(
             max_workers=1, thread_name_prefix="dlq-overlap"
@@ -125,33 +137,20 @@ class PipelineJob:
             # analysis (eager per Dataset op) while the count job has
             # the driver parked in a py4j recv — py4j serves threads
             # over separate connections, so the two overlap cleanly.
-            # The pool is the same single reused worker the DLQ
-            # overlap uses; the plan future is always resolved before
-            # the DLQ write is submitted.
+            # The pool is the same single reused worker the DLQ write
+            # uses; the plan future is resolved before that submit.
             plan_fut = self._dlq_pool.submit(self._plan_valid, tagged)
             try:
                 n_rows, n_dlq = self._count_tagged(tagged)
-            except BaseException:
-                from concurrent.futures import wait as _fut_wait
-
-                _fut_wait([plan_fut])
-                raise
-            if n_rows == 0:
-                # cancel() almost never lands (the idle single worker
-                # starts the task immediately) — resolve the future so
-                # a schema/analysis error on an all-tombstone batch
-                # surfaces HERE, not swallowed until a later nonempty
-                # batch misattributes it.
-                plan_fut.result()
-                return
+            finally:
+                # resolved on every path, so a schema/analysis error —
+                # on an all-tombstone batch too — surfaces HERE, not
+                # swallowed until a later nonempty batch misattributes
+                # it
+                wait([plan_fut])
             typed = plan_fut.result()
-            overlap = (
-                os.environ.get("SPARK_GRAFT_DLQ_OVERLAP", "on") != "off"
-            )
-            if overlap:
-                self._run_overlapped(tagged, typed, n_dlq, n_rows)
-            else:
-                self._run_sequential(tagged, typed, n_dlq, n_rows)
+            if n_rows > 0:
+                self._deliver(tagged, typed, n_dlq, n_rows)
         finally:
             tagged.unpersist()
 
@@ -169,33 +168,28 @@ class PipelineJob:
         317 ms, r9b profile) — the cache has to be built for the
         writes anyway, so the fastest probe is the one that builds it
         in parallel."""
-        from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-            dlq_condition,
-        )
-
         row = tagged.select(
             F.count(F.lit(1)).alias("n_rows"),
             F.count(F.when(dlq_condition(), 1)).alias("n_dlq"),
         ).first()
         return int(row["n_rows"]), int(row["n_dlq"])
 
-    def _run_overlapped(
+    def _deliver(
         self, tagged: DataFrame, typed: DataFrame, n_dlq: int,
         n_rows: int,
     ) -> None:
-        """Happy path with the DLQ write OVERLAPPED against the valid
-        write (default; ``SPARK_GRAFT_DLQ_OVERLAP=off`` opts out).
+        """The valid insert, with the DLQ write OVERLAPPED against it.
 
         The DLQ split is a per-batch minority and its write is a fixed
-        ~130 ms job at the reference's 25 k-row trigger — fully
-        hidden behind the (longer) valid write when run concurrently;
-        both jobs read the already-built tagged cache, so no work
+        ~130 ms job at the reference's 25 k-row trigger — hidden
+        behind the (longer) valid write when run concurrently; both
+        jobs read the already-built tagged cache, so no work
         duplicates. Ordering vs the reference: main.py pushes invalid
         rows AFTER the insert; the two writes land on different
         systems (ClickHouse vs the DLQ topic), so their relative order
-        is unobservable — but a deployment whose sinks share a
-        connection, or that wants the reference's strict sequence,
-        sets the knob off.
+        is unobservable, and a failed trigger is replayed wholesale
+        under the at-least-once checkpoint contract, which duplicates
+        DLQ rows either way.
 
         Drift caveat (documented, rare): if the valid sink fails and
         re-validation under the re-fetched schema RECLASSIFIES rows,
@@ -204,8 +198,8 @@ class PipelineJob:
         at-least-once superset. Rows invalid under both schemas are
         written once (the retry anti-joins them away) but carry the
         OLD schema's error string. With an unchanged schema (sink
-        failures that are not drift) accounting is exactly the
-        sequential path's."""
+        failures that are not drift) every row is delivered exactly
+        once."""
         fut = None
         if n_dlq > 0:
             # Under pinned-thread mode (PYSPARK_PIN_THREAD, the
@@ -230,7 +224,7 @@ class PipelineJob:
                         sc._jsc.sc().setLocalProperties(props)
                     except Exception:  # pragma: no cover
                         pass
-                self._write_dlq(tagged, n_dlq)
+                self._send_dlq(split_tagged(tagged, self._value_col)[1], n_dlq)
 
             fut = self._dlq_pool.submit(_dlq_task)
         sink_exc = None
@@ -244,9 +238,7 @@ class PipelineJob:
             # write before propagating, else run_batch's finally
             # unpersists the tagged cache under a running job
             if fut is not None:
-                from concurrent.futures import wait as _fut_wait
-
-                _fut_wait([fut])
+                wait([fut])
             raise
         # raises if DLQ delivery failed → fail the batch (replayed
         # wholesale under the at-least-once checkpoint contract);
@@ -268,35 +260,13 @@ class PipelineJob:
                 n_rows=n_rows,
             )
 
-    def _run_sequential(
-        self, tagged: DataFrame, typed: DataFrame, n_dlq: int,
-        n_rows: int,
-    ) -> None:
-        """Strict reference ordering: valid insert (with drift retry)
-        first, DLQ push after (main.py:430-462)."""
-        try:
-            self._sink(typed)
-        except Exception:
-            self._retry_after_failure(
-                tagged, invalid_already_written=False, n_rows=n_rows
-            )
-            return
-        if n_dlq > 0:
-            self._write_dlq(tagged, n_dlq)
-
-    def _write_dlq(self, tagged: DataFrame, n_dlq: int) -> None:
-        """Deliver the (exactly ``n_dlq``-row) DLQ split."""
-        from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-            split_tagged,
-        )
-
-        _, dlq = split_tagged(tagged, self._value_col)
-        if n_dlq <= DLQ_SINGLE_TASK_MAX_ROWS:
-            # minority split → ONE write task instead of |tagged
-            # partitions| tiny files. repartition, NOT coalesce:
-            # coalesce(1) pulls the whole tagged scan onto one core
-            # (~10% on 250k-row bulk batches); the exchange moves only
-            # the filtered minority rows.
+    def _send_dlq(self, dlq: DataFrame, max_rows: int) -> None:
+        """Deliver a DLQ frame of at most ``max_rows`` rows. A minority
+        split goes out as ONE write task instead of |tagged partitions|
+        tiny files. repartition, NOT coalesce: coalesce(1) pulls the
+        whole tagged scan onto one core (~10% on 250k-row bulk
+        batches); the exchange moves only the filtered minority rows."""
+        if max_rows <= DLQ_SINGLE_TASK_MAX_ROWS:
             dlq = dlq.repartition(1)
         self._dlq_sink(dlq)
 
@@ -312,10 +282,6 @@ class PipelineJob:
         cache (``tagged.select(value_col)``) — the source is not
         re-fetched even in the drift path, and the width set by the
         fan-out carries over."""
-        from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-            split_tagged,
-        )
-
         self.invalidate_schema()
         rework = tagged.select(self._value_col)
         tagged2 = self._tag(rework)
@@ -340,35 +306,28 @@ class PipelineJob:
                 dlq2 if failed is None else dlq2.unionByName(failed)
             )
             if invalid_already_written:
-                # the overlap thread already delivered every row
-                # invalid under the OLD schema — deliver only rows it
-                # has not written: newly-invalid ones, and failed
-                # valid ones that were not old-invalid. Invalidity is
-                # a function of the message text, so the value
-                # anti-join removes exactly the already-written rows;
-                # applying it AFTER the union also covers the
-                # double-failure arm's reclassified rows
-                # (invalid-under-old, valid-under-new), which would
-                # otherwise reach the DLQ twice with contradictory
-                # errors. Each message lands exactly once per attempt;
-                # under reclassifying drift the delivered error string
-                # is the old schema's (documented in _run_overlapped).
+                # _deliver already wrote every row invalid under the
+                # OLD schema — deliver only rows it has not written:
+                # newly-invalid ones, and failed valid ones that were
+                # not old-invalid. Invalidity is a function of the
+                # message text, so the value anti-join removes exactly
+                # the already-written rows; applying it AFTER the union
+                # also covers the double-failure arm's reclassified
+                # rows (invalid-under-old, valid-under-new), which
+                # would otherwise reach the DLQ twice with
+                # contradictory errors. Each message lands exactly once
+                # per attempt; under reclassifying drift the delivered
+                # error string is the old schema's (see _deliver).
                 _, dlq1 = split_tagged(tagged, self._value_col)
                 dlq_final = dlq_final.join(
                     dlq1.select("row"), on="row", how="left_anti"
                 )
             # an all-tombstone batch has an empty union and must NOT
-            # invoke the DLQ sink with an empty frame
+            # invoke the DLQ sink with an empty frame; dlq_final is a
+            # union of disjoint subsets of the batch, so n_rows bounds
+            # it without an extra count job
             if not dlq_final.isEmpty():
-                # same single-task collapse _write_dlq applies on the
-                # happy path: dlq_final is a union of disjoint subsets
-                # of the batch, so |dlq_final| <= n_rows bounds it
-                # without an extra count job — left at full tagged2
-                # width the retry arm emitted |partitions| tiny DLQ
-                # files/commits per drift event
-                if n_rows <= DLQ_SINGLE_TASK_MAX_ROWS:
-                    dlq_final = dlq_final.repartition(1)
-                self._dlq_sink(dlq_final)
+                self._send_dlq(dlq_final, n_rows)
         finally:
             tagged2.unpersist()
 
@@ -376,12 +335,13 @@ class PipelineJob:
         """Spread a narrow micro-batch across cores before the
         validate/cast pipeline. The reference is single-threaded by
         construction; a 1-partition topic otherwise pins the engine to
-        one core per trigger too (THROUGHPUT_r08's parity_1p regime —
-        ~200 ms UDF + ~300 ms from_json + casts all serial). A local
-        round-robin exchange of a 25 k-row batch costs ~100 ms and
-        spreads the compute over ``target`` cores (4 on a 4-core
-        host, at most 8); rows have no order semantics here (the sink
-        is set-oriented; DLQ rows carry their own payload).
+        one core per trigger too (the parity_1p regime of ``git show
+        6969692:THROUGHPUT_r08.json`` — ~200 ms UDF + ~300 ms from_json
+        + casts all serial). A local round-robin exchange of a 25 k-row
+        batch costs ~100 ms and spreads the compute over ``target``
+        cores (4 on a 4-core host, at most 8); rows have no order
+        semantics here (the sink is set-oriented; DLQ rows carry their
+        own payload).
 
         Target: min(defaultParallelism, 8) partitions; batches already
         at least that wide are left alone. The explicit N keeps AQE
@@ -398,36 +358,14 @@ class PipelineJob:
         otherwise re-run for every downstream action (valid write, DLQ
         write, drift re-validation) — the reference validates each
         batch once (main.py:428)."""
-        from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-            tag_errors,
-        )
-
         schema = self._get_schema()
         return tag_errors(batch_df, schema, self._value_col).persist()
 
     def _plan_valid(self, tagged: DataFrame) -> DataFrame:
-        """Typed valid frame over a tagged frame.
-
-        Every Dataset op here is an EAGER analysis pass the streaming
-        shell pays per trigger, so the pipeline is fused to five ops:
-        tag → filter → project-value → parse → cast-expand. The DLQ
-        frame is NOT built here — _write_dlq derives it from the
+        """Typed valid frame over a tagged frame (P3, ``typed_valid``).
+        The DLQ frame is NOT built here — _deliver derives it from the
         tagged cache only when the count job said rows exist."""
-        from kafka2clickhouse_py_streamer_spark.pipeline.core import (
-            receiving_transform,
-        )
-
-        schema = self._get_schema()
-        valid = tagged.filter(F.col("_err").isNull()).select(
-            self._value_col
-        )
-        # parse + cast Columns are cached per (app, schema, value_col):
-        # triggers fire many times a second in the parity regime and
-        # rebuilding the fragments was measurable driver fixed cost
-        parse_col, cast_cols = receiving_transform(
-            tagged.sparkSession, schema, self._value_col
-        )
-        return valid.select(parse_col.alias("_parsed")).select(*cast_cols)
+        return typed_valid(tagged, self._get_schema(), self._value_col)
 
     def start(
         self,
@@ -449,10 +387,10 @@ class PipelineJob:
         OFF. The foreachBatch body re-runs the same fixed, tiny plan
         every trigger, and AQE's stage-at-a-time scheduling adds ~200 ms
         per trigger for re-optimizations that can never change this plan
-        (measured, THROUGHPUT_r09). The per-trigger tagged cache lives
-        for milliseconds and is read 2-3 times, so compression buys
-        nothing there and costs ~60 ms per 25 k-row build (measured, r9b
-        profile). Structured Streaming runs each query on a clone of the
+        (measured; SCALE.md, "Micro-batch trigger anatomy (round 9)").
+        The per-trigger tagged cache lives for milliseconds and is read
+        2-3 times, so compression buys nothing there and costs ~60 ms
+        per 25 k-row build (measured, r9b profile). Structured Streaming runs each query on a clone of the
         session taken inside ``writer.start()``, so both keys are set for
         that call only and the caller's session gets its own values back
         — an analytic session can host the ingest stream unchanged."""

@@ -81,15 +81,15 @@ def _fs(spark, path: str):
 
 
 def _partitions(fs, root, through_batch: int) -> list:
-    """The ``batch_id=`` partition paths a fold through
-    ``through_batch`` covers (the previous compacted one included)."""
+    """The per-batch ``batch_id=`` partition paths a fold through
+    ``through_batch`` covers (the compacted one excluded)."""
     parts = []
     for st in fs.listStatus(root):
         name = st.getPath().getName()
         if not name.startswith("batch_id="):
             continue
         bid = int(name.split("=", 1)[1])
-        if bid == COMPACTED_BATCH_ID or bid <= through_batch:
+        if bid != COMPACTED_BATCH_ID and bid <= through_batch:
             parts.append(st.getPath())
     return parts
 
@@ -126,11 +126,12 @@ def _recover_compaction(spark, path: str) -> str | None:
 
 
 def _swap_in(jvm, fs, path: str, tmp, old_parts) -> None:
-    for p in old_parts:
-        fs.delete(p, True)
+    """Replace ``old_parts`` and the compacted partition with ``tmp``."""
     target = jvm.org.apache.hadoop.fs.Path(
         path, f"batch_id={COMPACTED_BATCH_ID}"
     )
+    for p in [*old_parts, target]:
+        fs.delete(p, True)
     if not fs.rename(tmp, target):
         raise RuntimeError(f"compaction swap failed: {tmp} -> {target}")
 
@@ -153,7 +154,10 @@ def compact(
     compacted rows with the operator's own merge: ``DataFrame.distinct``
     for claim/digest sets, the sketch merges for summed or max-merged
     cells, the SCD frontier for as-of dimensions. Returns the number of
-    partitions removed.
+    per-batch partitions through ``through_batch`` folded away, by this
+    call's fold or by the roll-forward of an interrupted swap it
+    finished. When only the compacted partition remains, nothing is
+    read or written.
 
     Safety contract:
 
@@ -171,11 +175,14 @@ def compact(
       rolls the swap forward. ``_crash_point`` (``"before_marker"`` /
       ``"after_marker"``) raises :class:`CompactionCrash` there.
     """
-    _recover_compaction(spark, path)
     jvm, fs, root = _fs(spark, path)
+    # recovery folds nothing new in, so every per-batch partition
+    # listed here is removed by it or by the fold below
+    n_folded = len(_partitions(fs, root, through_batch))
+    _recover_compaction(spark, path)
     old_parts = _partitions(fs, root, through_batch)
     if not old_parts:
-        return 0
+        return n_folded
     state = spark.read.parquet(path).filter(
         (F.col("batch_id") == COMPACTED_BATCH_ID)
         | (F.col("batch_id") <= through_batch)
@@ -192,4 +199,4 @@ def compact(
     if _crash_point == "after_marker":
         raise CompactionCrash("injected crash after commit marker")
     _swap_in(jvm, fs, path, tmp, old_parts)
-    return len(old_parts)
+    return n_folded

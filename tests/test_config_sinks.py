@@ -68,16 +68,15 @@ def test_env_file_parser(tmp_path):
     assert load_env_file(str(envf)) == {"A": "1", "B": "quoted"}
 
 
-# The package's only env reads: deployment resources, data/sink
-# locations and the reference-parity DLQ ordering switch. Tuning confs
-# are constants in session.py (``extra_conf`` overrides them), offsets
-# are always persisted and iterative cuts follow Spark's checkpoint dir.
+# The package's only env reads: deployment resources and data/sink
+# locations. Tuning confs are constants in session.py (``extra_conf``
+# overrides them), offsets are always persisted, iterative cuts follow
+# Spark's checkpoint dir and the ingest path has one delivery order.
 ENGINE_ENV_VARS = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
     "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_SINK_DIR",
-    "SPARK_GRAFT_DLQ_OVERLAP",
 }
 
 

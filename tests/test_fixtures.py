@@ -166,10 +166,11 @@ def test_sf1_amplification_decorrelates_replicas(spark, tmp_path):
 
 def test_every_tool_import_resolves(monkeypatch):
     """Tier-1 never runs the scripts under tools/ (the soaks take
-    minutes), so a deleted module or function they import would break
-    them silently. Resolve every absolute import in tools/*.py and
-    bench.py, module-level and function-local, with the repo root and
-    tools/ on sys.path as the scripts themselves arrange; for
+    minutes) or the benchmark under perfbench/, so a deleted module or
+    function they import would break them silently. Resolve every
+    absolute import in tools/*.py, perfbench/*.py and bench.py,
+    module-level and function-local, with the repo root and tools/ on
+    sys.path as the scripts themselves arrange; for
     ``from <module> import a, b`` where the module lives in this repo
     (the package, perfbench, a sibling under tools/), require every
     imported name too."""
@@ -204,6 +205,7 @@ def test_every_tool_import_resolves(monkeypatch):
         ]
 
     scripts = sorted(_glob.glob(os.path.join(tools, "*.py")))
+    scripts += sorted(_glob.glob(os.path.join(repo, "perfbench", "*.py")))
     scripts.append(os.path.join(repo, "bench.py"))
     unresolved = []
     for path in scripts:
@@ -220,7 +222,8 @@ def test_every_tool_import_resolves(monkeypatch):
             if not bad and isinstance(node, ast.ImportFrom):
                 bad = missing_names(node)
             unresolved += [
-                f"{os.path.basename(path)}:{node.lineno} {m}" for m in bad
+                f"{os.path.relpath(path, repo)}:{node.lineno} {m}"
+                for m in bad
             ]
     assert len(scripts) > 1
     assert not unresolved, unresolved

@@ -116,12 +116,12 @@ def test_double_failure_routes_valid_to_dlq(spark):
     assert any("device_id" in e for e in errors)
 
 
-def test_retry_arm_dlq_collapses_to_one_task(spark, monkeypatch):
+def test_retry_arm_dlq_collapses_to_one_task(spark):
     """Round-9 advice: the drift-retry arm wrote dlq_final at full
     tagged2 width — |partitions| tiny DLQ files/commits per drift
-    event — while the happy path's _write_dlq collapses minority
-    splits to one task. The retry arm must apply the same collapse."""
-    monkeypatch.setenv("SPARK_GRAFT_DLQ_OVERLAP", "off")
+    event — while the happy path collapses minority splits to one
+    task. The retry arm must apply the same collapse: the overlapped
+    DLQ write and the retry arm's write are each one task."""
     parts_seen = []
 
     class PartProbeSink(ListSink):
@@ -133,7 +133,7 @@ def test_retry_arm_dlq_collapses_to_one_task(spark, monkeypatch):
     job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
     job.run_batch(make_batch(spark, [GOOD, BAD]))
     assert len(dlq.rows) == 2
-    assert parts_seen == [1], parts_seen
+    assert parts_seen == [1, 1], parts_seen
 
 
 def test_file_stream_end_to_end(spark, tmp_path):
@@ -2073,6 +2073,44 @@ def test_compaction_crash_recovery(spark, tmp_path):
     } == before
 
 
+def test_compaction_of_compacted_state_is_a_no_op(spark, tmp_path):
+    """Once only the compacted partition remains, a further compaction
+    reads and writes nothing and reports 0 partitions folded: every
+    file keeps its name and mtime, and the state keeps its rows."""
+    from kafka2clickhouse_py_streamer_spark.streaming.sketch_stream import (
+        countmin_update_batch,
+        merge_cells,
+    )
+    from kafka2clickhouse_py_streamer_spark.streaming.state import compact
+
+    state = str(tmp_path / "refold_state")
+    for bid, mod in ((0, 5), (1, 7), (2, 3)):
+        countmin_update_batch(
+            spark.createDataFrame(
+                [(i, i % mod) for i in range(40)],
+                "event_id long, user_id long",
+            ),
+            bid,
+            state,
+        )
+    assert compact(spark, state, 2, merge_cells) == 3
+
+    def snapshot():
+        files = {
+            os.path.relpath(os.path.join(d, f), state): os.stat(
+                os.path.join(d, f)
+            ).st_mtime_ns
+            for d, _, names in os.walk(state)
+            for f in names
+        }
+        rows = sorted(map(tuple, spark.read.parquet(state).collect()))
+        return files, rows
+
+    before = snapshot()
+    assert compact(spark, state, 2, merge_cells) == 0
+    assert snapshot() == before
+
+
 def test_countmin_estimates_unseen_key_is_zero(spark, tmp_path):
     """A key the stream never saw must estimate 0 (count-min's min
     over its cells, some of which have no row) — the inner-join form
@@ -3182,20 +3220,16 @@ def test_start_disables_aqe_by_default(spark, tmp_path):
 
 @pytest.mark.parametrize("fail_times", [0, 1, 2])
 @pytest.mark.parametrize("width", ["narrow", "wide"])
-@pytest.mark.parametrize("overlap", ["on", "off"])
-def test_run_batch_accounting_exact_all_paths(
-    spark, fail_times, width, overlap
-):
+def test_run_batch_accounting_exact_all_paths(spark, fail_times, width):
     """Exact row conservation through run_batch on a mixed batch, for
     every sink-failure arm (happy / drift-retry / double-failure),
     with the fan-out both on (a 1-partition batch) and off (a batch
-    already wider than its target), and in BOTH DLQ modes (r9b
-    overlapped default and the strict-ordering sequential path): every
-    input row is exactly one of sink-delivered, DLQ'd, or silently
-    dropped. The failure arms here keep the same schema across the
-    retry (no reclassification), so the overlapped mode's accounting
-    must be bit-identical to the sequential one."""
-    import os as _os
+    already wider than its target): every input row is exactly one of
+    sink-delivered, DLQ'd, or silently dropped. The failure arms here
+    keep the same schema across the retry (no reclassification), so
+    the overlapped DLQ write delivers each row exactly once. The
+    happy arm's sink rows are the batch API's typed frame."""
+    from kafka2clickhouse_py_streamer_spark.pipeline import process_batch
 
     n_good, n_bad, n_drop = 37, 11, 5
     payloads = (
@@ -3203,30 +3237,30 @@ def test_run_batch_accounting_exact_all_paths(
     )
     batch = make_batch(spark, payloads)
     batch = batch.coalesce(1) if width == "narrow" else batch.repartition(16)
-    _os.environ["SPARK_GRAFT_DLQ_OVERLAP"] = overlap
-    try:
-        sink, dlq = ListSink(fail_times=fail_times), ListSink()
-        job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
-        job.run_batch(batch)
-        if fail_times <= 1:
-            # happy or drift-retry-then-success: valid rows delivered
-            assert len(sink.rows) == n_good
-            assert len(dlq.rows) == n_bad
-            assert {r.error for r in dlq.rows} == {
-                "data must contain ['device_id'] properties"
-            }
-        else:
-            # double failure: valid rows join the DLQ with the insert
-            # error; invalid rows keep their validation error
-            assert sink.rows == []
-            assert len(dlq.rows) == n_bad + n_good
-            errors = [r.error for r in dlq.rows]
-            assert sum("insert failed after retry" in e for e in errors) == n_good
-            assert sum("device_id" in e and "properties" in e for e in errors) == n_bad
-        # tombstones/malformed are silently dropped in every arm
-        assert len(sink.rows) + len(dlq.rows) <= n_good + n_bad
-    finally:
-        _os.environ.pop("SPARK_GRAFT_DLQ_OVERLAP", None)
+    sink, dlq = ListSink(fail_times=fail_times), ListSink()
+    job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
+    job.run_batch(batch)
+    if fail_times <= 1:
+        # happy or drift-retry-then-success: valid rows delivered
+        assert len(sink.rows) == n_good
+        assert len(dlq.rows) == n_bad
+        assert {r.error for r in dlq.rows} == {
+            "data must contain ['device_id'] properties"
+        }
+        if fail_times == 0:
+            assert sorted(sink.rows) == sorted(
+                process_batch(batch, SCHEMA)[0].collect()
+            )
+    else:
+        # double failure: valid rows join the DLQ with the insert
+        # error; invalid rows keep their validation error
+        assert sink.rows == []
+        assert len(dlq.rows) == n_bad + n_good
+        errors = [r.error for r in dlq.rows]
+        assert sum("insert failed after retry" in e for e in errors) == n_good
+        assert sum("device_id" in e and "properties" in e for e in errors) == n_bad
+    # tombstones/malformed are silently dropped in every arm
+    assert len(sink.rows) + len(dlq.rows) <= n_good + n_bad
 
 
 def test_steady_trigger_scans_source_once(spark, tmp_path):
@@ -3296,56 +3330,42 @@ class ReclassifyingProvider:
 
 
 @pytest.mark.parametrize("fail_times", [1, 2])
-@pytest.mark.parametrize("overlap", ["on", "off"])
-def test_reclassifying_drift_retry_accounting(spark, overlap, fail_times):
+def test_reclassifying_drift_retry_accounting(spark, fail_times):
     """True drift that RECLASSIFIES rows, in the retry-success AND
-    double-failure arms. Sequential mode matches the reference
-    exactly: the retry re-validates everything and DLQs only the NEW
-    invalid set (plus, on a second failure, the new valid set with the
-    insert error). Overlapped mode is the documented at-least-once
-    superset — rows invalid under the OLD schema were already DLQ'd
-    before the sink failed — but within the trigger each MESSAGE
-    reaches the DLQ at most once: the retry anti-joins the
-    already-written values out of its whole final frame, covering both
-    the invalid-under-both rows and (in the double-failure arm) the
-    reclassified rows that would otherwise land twice with
-    contradictory errors."""
-    import os as _os
-
+    double-failure arms. The DLQ is the documented at-least-once
+    superset of the reference's — rows invalid under the OLD schema
+    were already DLQ'd, overlapped with the insert, before the sink
+    failed — but within the trigger each MESSAGE reaches the DLQ at
+    most once: the retry anti-joins the already-written values out of
+    its whole final frame, covering both the invalid-under-both rows
+    and (in the double-failure arm) the reclassified rows that would
+    otherwise land twice with contradictory errors."""
     has_note_no_id = '{"speed": 1.0, "note": "n"}'  # invalid1 → valid2
     has_id_no_note = '{"device_id": 7, "speed": 2.0}'  # valid1 → invalid2
     has_both = '{"device_id": 8, "speed": 3.0, "note": "m"}'  # valid both
     has_neither = '{"speed": 4.0}'  # invalid under BOTH schemas
 
-    _os.environ["SPARK_GRAFT_DLQ_OVERLAP"] = overlap
-    try:
-        sink, dlq = ListSink(fail_times=fail_times), ListSink()
-        job = PipelineJob(ReclassifyingProvider(), sink, dlq)
-        job.run_batch(
-            make_batch(
-                spark,
-                [has_note_no_id, has_id_no_note, has_both, has_neither],
-            )
+    sink, dlq = ListSink(fail_times=fail_times), ListSink()
+    job = PipelineJob(ReclassifyingProvider(), sink, dlq)
+    job.run_batch(
+        make_batch(
+            spark,
+            [has_note_no_id, has_id_no_note, has_both, has_neither],
         )
-    finally:
-        _os.environ.pop("SPARK_GRAFT_DLQ_OVERLAP", None)
+    )
 
     dlq_rows = sorted(r.row for r in dlq.rows)
     if fail_times == 1:
         # retry succeeded → rows valid under schema 2 are inserted
         assert sorted(r.note for r in sink.rows) == ["m", "n"]
-        if overlap == "off":
-            # reference-exact: only the re-validated invalid set
-            assert dlq_rows == sorted([has_id_no_note, has_neither])
-        else:
-            # superset: old-invalid written pre-failure + newly-invalid
-            assert dlq_rows == sorted(
-                [has_note_no_id, has_id_no_note, has_neither]
-            )
+        # superset: old-invalid written pre-failure + newly-invalid
+        assert dlq_rows == sorted(
+            [has_note_no_id, has_id_no_note, has_neither]
+        )
     else:
         # double failure: nothing inserted; every message lands in the
-        # DLQ EXACTLY once in both modes (the four messages partition
-        # into old-invalid / new-invalid / failed-valid legs)
+        # DLQ EXACTLY once (the four messages partition into
+        # old-invalid / new-invalid / failed-valid legs)
         assert sink.rows == []
         assert dlq_rows == sorted(
             [has_note_no_id, has_id_no_note, has_both, has_neither]
@@ -3353,18 +3373,15 @@ def test_reclassifying_drift_retry_accounting(spark, overlap, fail_times):
         errors = {r.row: r.error for r in dlq.rows}
         # the rows valid under the retry schema carry the insert error
         assert "insert failed after retry" in errors[has_both]
-        if overlap == "off":
-            assert "insert failed after retry" in errors[has_note_no_id]
-        else:
-            # overlapped: written pre-failure with the OLD schema's
-            # validation error (documented)
-            assert "device_id" in errors[has_note_no_id]
+        # written pre-failure with the OLD schema's validation error
+        # (documented)
+        assert "device_id" in errors[has_note_no_id]
 
 
 def test_overlap_crash_after_dlq_write_replays_without_loss(
     spark, tmp_path
 ):
-    """The overlapped mode's new crash window, exercised as a REAL
+    """The overlapped DLQ write's crash window, exercised as a REAL
     streaming kill/replay: the DLQ write lands, then the trigger dies
     before the batch commits (here: the DLQ sink raises AFTER its
     parquet write — the 'wrote but crashed before ack' shape). The
@@ -3429,7 +3446,7 @@ def test_overlap_crash_after_dlq_write_replays_without_loss(
 
 
 def test_both_writes_failing_chains_both_causes(spark):
-    """Overlapped mode, valid sink AND DLQ sink both failing: the
+    """Valid sink AND overlapped DLQ sink both failing: the
     batch must abort on the DLQ failure (it cannot be retried away)
     with the sink failure chained as its __cause__ — neither root
     cause may vanish from the operator's traceback."""
@@ -3479,15 +3496,13 @@ def test_all_tombstone_double_failure_skips_empty_dlq_write(spark):
     assert dlq.calls == 0
 
 
-@pytest.mark.parametrize("overlap", ["on", "off"])
-def test_non_acting_sink_routes_exactly(spark, overlap):
+def test_non_acting_sink_routes_exactly(spark):
     """An enqueue-only sink (no Spark action of its own — the r8/r9
     Observation design's failure mode, which leaked one JVM
     ObservationManager entry per such trigger until disabled) must
-    still see exact routing under the r9b counts-first design, in
-    both DLQ modes: the pre-insert count job (main.py:429 parity)
-    decides DLQ delivery, not anything the sink runs."""
-    import os as _os
+    still see exact routing under the r9b counts-first design: the
+    pre-insert count job (main.py:429 parity) decides DLQ delivery,
+    not anything the sink runs."""
 
     class EnqueueSink:
         def __init__(self):
@@ -3496,17 +3511,13 @@ def test_non_acting_sink_routes_exactly(spark, overlap):
         def __call__(self, df):
             self.frames.append(df)  # no action
 
-    _os.environ["SPARK_GRAFT_DLQ_OVERLAP"] = overlap
-    try:
-        sink, dlq = EnqueueSink(), ListSink()
-        job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
-        batch = make_batch(spark, [GOOD, BAD])
-        job.run_batch(batch)
-        job.run_batch(batch)
-        assert len(sink.frames) == 2
-        assert len(dlq.rows) == 2
-    finally:
-        _os.environ.pop("SPARK_GRAFT_DLQ_OVERLAP", None)
+    sink, dlq = EnqueueSink(), ListSink()
+    job = PipelineJob(StaticSchemaProvider(SCHEMA), sink, dlq)
+    batch = make_batch(spark, [GOOD, BAD])
+    job.run_batch(batch)
+    job.run_batch(batch)
+    assert len(sink.frames) == 2
+    assert len(dlq.rows) == 2
 
 
 def test_hist_compaction_crash_through_seam(spark, tmp_path):
