@@ -158,7 +158,7 @@ def warm_queries(spark, registry, names, sf_dir) -> None:
 
 def time_queries(
     spark, registry, names, sf_dir
-) -> tuple[dict[str, float], dict[str, list[float]]]:
+) -> tuple[dict[str, float], dict[str, list[float]], dict[str, int]]:
     """Median-of-5 per query with cache hygiene: the host shows
     2-3× wall-time variance across identical runs, and a single sample
     would grade noise, not the engine. CacheManager is cleared between
@@ -166,11 +166,17 @@ def time_queries(
     plan, so reps 2+ would read the rep-1 materialization and the
     median would measure cache-read cost) and after each query's last
     rep (cross-query memory-pressure bleed). Returns (medians,
-    per-query [min, max] spreads)."""
+    per-query [min, max] spreads, per-query generated-class compiles
+    over the timed reps — nonzero after the warm passes means the
+    codegen cache is thrashing and the reps pay driver planning)."""
+    from kafka2clickhouse_py_streamer_spark.session import codegen_compiles
+
     reps = 5
     times: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     for name in names:
+        before = codegen_compiles(spark)
         samples = []
         for _ in range(reps):
             spark.catalog.clearCache()
@@ -178,10 +184,11 @@ def time_queries(
             registry[name].fn(spark, sf_dir).count()
             samples.append(time.perf_counter() - t0)
         spark.catalog.clearCache()
+        compiles[name] = codegen_compiles(spark) - before
         samples.sort()
         times[name] = round(samples[reps // 2], 3)
         spreads[name] = [round(samples[0], 3), round(samples[-1], 3)]
-    return times, spreads
+    return times, spreads, compiles
 
 
 def gate_fields(times: dict[str, float], host_cal: float) -> dict:
@@ -239,7 +246,10 @@ def main() -> None:
     # per-query numbers below measure query cost, deterministically,
     # and the 2x gate can't be gamed or spooked by cache order.
     from kafka2clickhouse_py_streamer_spark.llm import similarity as sim
-    from kafka2clickhouse_py_streamer_spark.session import build_seconds
+    from kafka2clickhouse_py_streamer_spark.session import (
+        build_seconds,
+        codegen_compiles,
+    )
 
     for build in (
         lambda: sim._train_centroids(sim._base(spark, sf_dir), sf_dir),
@@ -249,7 +259,7 @@ def main() -> None:
     prebuilt = build_seconds()
 
     warm_queries(spark, registry, HEADLINE, sf_dir)
-    times, spreads = time_queries(spark, registry, HEADLINE, sf_dir)
+    times, spreads, compiles = time_queries(spark, registry, HEADLINE, sf_dir)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -265,6 +275,10 @@ def main() -> None:
     # prebuilt two plus those the queries paid (phash, m08/CC labels,
     # plane counts, ...)
     sidecar["substrates"] = build_seconds()
+    # generated-class compiles per query over its timed reps, and over
+    # the whole session (one session per process, so the JVM's count)
+    sidecar["codegen_compiles"] = compiles
+    sidecar["codegen_compiles_total"] = codegen_compiles(spark)
     sidecar.update(gate_fields(times, host_cal))
     # The sidecar is the TRACKED median-of-3 record at the driver's
     # bench scale (sf0.1) — round notes quote it beside the driver run.

@@ -11,6 +11,12 @@ the right default on a large cluster:
   path).
 - Shuffle partitions default to cores locally; on a real cluster AQE's
   coalescing makes the initial number far less critical.
+- Spark's generated-class cache holds 4096 classes, not Spark's 100:
+  the registry's queries generate ~2 500 distinct classes per pass, so
+  at 100 the LRU evicts every class before its next use and each warm
+  pass recompiles (Janino, then JIT) almost all of them. A session the
+  engine did not build (``__spark_entry__.entry(spark)``, say) keeps
+  Spark's 100 unless its own builder sets the conf.
 
 It also holds the one registry of *session substrates* (:func:`substrate`):
 engine-built state that is immutable for one run's view of its inputs.
@@ -95,10 +101,26 @@ def get_spark(
         # delete them once their RDDs are GC'd instead of accumulating
         # for the application lifetime (r7 advice)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # Static conf (read once when the JVM's first session starts;
+        # spark.conf.set afterwards is ignored). Spark's 100-class LRU
+        # thrashes: the 11 corpus queries generate ~400 distinct
+        # classes and the registry ~2 500, so every warm pass
+        # recompiled ~350 / ~3 500 of them. 4096 covers the registry
+        # with headroom; the metaspace and code-heap cost is measured in
+        # SCALE.md, "Codegen cache thrash".
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles of generated classes in this JVM so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count). A cache hit
+    adds nothing, so a delta over a warm pass counts its recompiles."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 # Session substrates: state the engine builds once per run and then

@@ -125,6 +125,31 @@ def test_session_tuning_confs_are_constants(spark):
     assert spark.sparkContext.getConf().get(
         "spark.io.compression.codec"
     ) == "lz4"
+    # a static SQL conf: only the builder can set it
+    assert spark.sparkContext.getConf().get(
+        "spark.sql.codegen.cache.maxEntries"
+    ) == "4096"
+
+
+def test_codegen_cache_holds_a_working_set_over_spark_default(spark):
+    """120 whole-stage-codegen projections, each with its own inlined
+    literal, so each generates a distinct class: more than Spark's
+    default cache of 100. Run twice, the second round must find every
+    class cached and compile nothing. Building each plan's RDD compiles
+    its class on the driver, so no job has to run."""
+    from pyspark.sql import functions as F
+
+    from kafka2clickhouse_py_streamer_spark.session import codegen_compiles
+
+    def one_round() -> int:
+        before = codegen_compiles(spark)
+        for i in range(1_000_001, 1_000_121):
+            df = spark.range(1).select((F.col("id") + i).alias("x"))
+            df._jdf.queryExecution().executedPlan().execute()
+        return codegen_compiles(spark) - before
+
+    assert one_round() >= 100
+    assert one_round() == 0
 
 
 def test_parquet_sinks_roundtrip(spark, tmp_path):
