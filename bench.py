@@ -158,7 +158,9 @@ def warm_queries(spark, registry, names, sf_dir) -> None:
 
 def time_queries(
     spark, registry, names, sf_dir
-) -> tuple[dict[str, float], dict[str, list[float]], dict[str, int]]:
+) -> tuple[
+    dict[str, float], dict[str, list[float]], dict[str, int], dict[str, int]
+]:
     """Median-of-5 per query with cache hygiene: the host shows
     2-3× wall-time variance across identical runs, and a single sample
     would grade noise, not the engine. CacheManager is cleared between
@@ -168,15 +170,22 @@ def time_queries(
     rep (cross-query memory-pressure bleed). Returns (medians,
     per-query [min, max] spreads, per-query generated-class compiles
     over the timed reps — nonzero after the warm passes means the
-    codegen cache is thrashing and the reps pay driver planning)."""
-    from kafka2clickhouse_py_streamer_spark.session import codegen_compiles
+    codegen cache is thrashing and the reps pay driver planning — and
+    per-query JIT compile milliseconds over the timed reps, which
+    show how much of the reps' CPU went to HotSpot's compilers)."""
+    from kafka2clickhouse_py_streamer_spark.session import (
+        codegen_compiles,
+        jit_compile_ms,
+    )
 
     reps = 5
     times: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     compiles: dict[str, int] = {}
+    jit_ms: dict[str, int] = {}
     for name in names:
         before = codegen_compiles(spark)
+        jit_before = jit_compile_ms(spark)
         samples = []
         for _ in range(reps):
             spark.catalog.clearCache()
@@ -185,10 +194,11 @@ def time_queries(
             samples.append(time.perf_counter() - t0)
         spark.catalog.clearCache()
         compiles[name] = codegen_compiles(spark) - before
+        jit_ms[name] = jit_compile_ms(spark) - jit_before
         samples.sort()
         times[name] = round(samples[reps // 2], 3)
         spreads[name] = [round(samples[0], 3), round(samples[-1], 3)]
-    return times, spreads, compiles
+    return times, spreads, compiles, jit_ms
 
 
 def gate_fields(times: dict[str, float], host_cal: float) -> dict:
@@ -249,6 +259,7 @@ def main() -> None:
     from kafka2clickhouse_py_streamer_spark.session import (
         build_seconds,
         codegen_compiles,
+        jit_compile_ms,
     )
 
     for build in (
@@ -259,7 +270,9 @@ def main() -> None:
     prebuilt = build_seconds()
 
     warm_queries(spark, registry, HEADLINE, sf_dir)
-    times, spreads, compiles = time_queries(spark, registry, HEADLINE, sf_dir)
+    times, spreads, compiles, jit_ms = time_queries(
+        spark, registry, HEADLINE, sf_dir
+    )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -279,6 +292,9 @@ def main() -> None:
     # the whole session (one session per process, so the JVM's count)
     sidecar["codegen_compiles"] = compiles
     sidecar["codegen_compiles_total"] = codegen_compiles(spark)
+    # JIT (C1 + C2) compile milliseconds, the same way
+    sidecar["jit_compile_ms"] = jit_ms
+    sidecar["jit_compile_ms_total"] = jit_compile_ms(spark)
     sidecar.update(gate_fields(times, host_cal))
     # The sidecar is the TRACKED median-of-3 record at the driver's
     # bench scale (sf0.1) — round notes quote it beside the driver run.

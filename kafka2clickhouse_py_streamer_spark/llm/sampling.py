@@ -137,7 +137,27 @@ def _unpersist_registered(frame: DataFrame, blocking: bool) -> bool:
         return False
 
 
-def _register_offsets_persist(frame: DataFrame) -> None:
+def _still_persisted(frame: DataFrame) -> bool:
+    """False once the frame holds no blocks: ``spark.catalog.clearCache()``
+    (or the frame's own ``unpersist``) dropped it, or its session ended."""
+    from pyspark import StorageLevel
+
+    try:
+        return frame.storageLevel != StorageLevel.NONE
+    except Exception:
+        return not _session_stopped(frame)
+
+
+def _persist_offsets(frame: DataFrame, level) -> DataFrame:
+    """``frame.persist(level)``, registered for
+    release_offsets_materializations. Entries that no longer hold blocks
+    are dropped from the registry first (never unpersisted: a live entry
+    may still have lazy consumers). First, because an entry's storage
+    level is looked up by plan, so once ``frame`` is cached an entry
+    that clearCache dropped would read as persisted again if its plan
+    is the same."""
+    _OFFSETS_PERSISTED[:] = [f for f in _OFFSETS_PERSISTED if _still_persisted(f)]
+    frame = frame.persist(level)
     _OFFSETS_PERSISTED.append(frame)
     if len(_OFFSETS_PERSISTED) > _OFFSETS_PERSISTED_CAP:
         import logging
@@ -149,6 +169,7 @@ def _register_offsets_persist(frame: DataFrame) -> None:
             "still-lazy consumers — see the registry note above)",
             len(_OFFSETS_PERSISTED),
         )
+    return frame
 
 
 def release_offsets_materializations(blocking: bool = False) -> int:
@@ -243,14 +264,13 @@ def _two_pass_offsets(
     # Lineage is retained either way, so total block loss
     # recomputes instead of killing the job.
     local = spark.conf.get("spark.master", "").startswith("local")
-    ranged = ranged.persist(
-        StorageLevel.MEMORY_AND_DISK if local
-        else StorageLevel.DISK_ONLY_2
-    )
     # registered for release_offsets_materializations — the entry
     # otherwise lives until clearCache/session end; the registry
     # warns past the cap; release stays caller-controlled
-    _register_offsets_persist(ranged)
+    ranged = _persist_offsets(
+        ranged,
+        StorageLevel.MEMORY_AND_DISK if local else StorageLevel.DISK_ONLY_2,
+    )
     totals = (
         ranged.groupBy(*group_cols, "pid")
         .agg(F.sum(val_col).alias("tot"))

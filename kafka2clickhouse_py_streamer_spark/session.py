@@ -17,6 +17,14 @@ the right default on a large cluster:
   pass recompiles (Janino, then JIT) almost all of them. A session the
   engine did not build (``__spark_entry__.entry(spark)``, say) keeps
   Spark's 100 unless its own builder sets the conf.
+- The driver JVM's four C2 (tier-4) compile thresholds are raised by
+  :data:`TIER4_FACTOR` over the JDK defaults. Hot per-row code (JSON
+  parse, whole-stage codegen, parquet encode) crosses even the raised
+  thresholds within milliseconds; lukewarm Spark plumbing (closure
+  cleaning, task serialization, Catalyst rules, Janino) stays in C1
+  instead of costing C2 compile time inside every session's first
+  minutes. In local mode the executors are that same JVM; cluster
+  executors (``spark.executor.defaultJavaOptions``) keep JVM defaults.
 
 It also holds the one registry of *session substrates* (:func:`substrate`):
 engine-built state that is immutable for one run's view of its inputs.
@@ -29,6 +37,19 @@ import time
 from collections.abc import Callable, Hashable
 
 from pyspark.sql import SparkSession
+
+# HotSpot's tier-4 (C2) thresholds: JDK 17 defaults, scaled by one factor
+# chosen by a sweep (SCALE.md, "JIT warm-up tail")
+TIER4_DEFAULTS = {
+    "Tier4InvocationThreshold": 5000,
+    "Tier4MinInvocationThreshold": 600,
+    "Tier4CompileThreshold": 15000,
+    "Tier4BackEdgeThreshold": 40000,
+}
+TIER4_FACTOR = 4
+_DRIVER_JAVA_OPTIONS = " ".join(
+    f"-XX:{flag}={default * TIER4_FACTOR}" for flag, default in TIER4_DEFAULTS.items()
+)
 
 
 def get_spark(
@@ -109,6 +130,13 @@ def get_spark(
         # with headroom; the metaspace and code-heap cost is measured in
         # SCALE.md, "Codegen cache thrash".
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # JVM launch option, so it only reaches a JVM this builder
+        # starts. In the first corpus pass about half the process CPU
+        # was C2 compile time, spent on lukewarm Spark internals; the
+        # raised thresholds keep those in C1 (SCALE.md, "JIT warm-up
+        # tail"). Spark prepends defaultJavaOptions to extraJavaOptions,
+        # so a user's JFR or GC-log flags there keep these.
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JAVA_OPTIONS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -121,6 +149,14 @@ def codegen_compiles(spark: SparkSession) -> int:
     adds nothing, so a delta over a warm pass counts its recompiles."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jit_compile_ms(spark: SparkSession) -> int:
+    """Milliseconds HotSpot's JIT compilers (C1 and C2) have spent in
+    this JVM so far (``CompilationMXBean.getTotalCompilationTime``). A
+    JFR recording adds its own compiles, so compare with JFR off."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return int(mf.getCompilationMXBean().getTotalCompilationTime())
 
 
 # Session substrates: state the engine builds once per run and then

@@ -131,6 +131,41 @@ def test_session_tuning_confs_are_constants(spark):
     ) == "4096"
 
 
+def test_driver_jvm_runs_with_raised_c2_thresholds(spark):
+    """The tier-4 thresholds are JVM launch options: the conf must be on
+    the builder, and the running JVM must report the raised values.
+    They ride on defaultJavaOptions so extraJavaOptions stays free for
+    a user's own flags (Spark prepends the first to the second)."""
+    from kafka2clickhouse_py_streamer_spark.session import (
+        TIER4_DEFAULTS,
+        TIER4_FACTOR,
+    )
+
+    conf = spark.sparkContext.getConf()
+    # the running context fills extraJavaOptions with Spark's own
+    # module flags; get_spark adds nothing there
+    assert "Tier4" not in (conf.get("spark.driver.extraJavaOptions") or "")
+    opts = conf.get("spark.driver.defaultJavaOptions").split()
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert TIER4_FACTOR > 1
+    for flag, default in TIER4_DEFAULTS.items():
+        raised = default * TIER4_FACTOR
+        assert f"-XX:{flag}={raised}" in opts
+        assert bean.getVMOption(flag).getValue() == str(raised)
+
+
+def test_jit_compile_ms_reads_the_jvm_total(spark):
+    from kafka2clickhouse_py_streamer_spark.session import jit_compile_ms
+
+    before = jit_compile_ms(spark)
+    assert before > 0
+    spark.range(1000).selectExpr("sum(id * 3)").collect()
+    assert jit_compile_ms(spark) >= before
+
+
 def test_codegen_cache_holds_a_working_set_over_spark_default(spark):
     """120 whole-stage-codegen projections, each with its own inlined
     literal, so each generates a distinct class: more than Spark's

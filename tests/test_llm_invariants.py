@@ -225,6 +225,34 @@ def test_offsets_registry_never_auto_unpersists(spark, monkeypatch, caplog):
     assert not reg
 
 
+def test_offsets_registry_forgets_frames_clear_cache_dropped(
+    spark, monkeypatch, caplog
+):
+    """``spark.catalog.clearCache()`` unpersists every registered frame
+    behind the registry's back; the next registration must drop those
+    entries instead of pinning them, and so not warn about frames that
+    hold no blocks."""
+    import logging
+
+    from kafka2clickhouse_py_streamer_spark.llm import sampling
+
+    sampling.release_offsets_materializations()
+    monkeypatch.setattr(sampling, "_OFFSETS_PERSISTED_CAP", 1)
+    df = spark.createDataFrame(
+        [(j, f"g{j % 3}", j % 11) for j in range(100)],
+        "doc_id long, grp string, n_tokens long",
+    )
+    sampling._two_pass_offsets(df, ["grp"])
+    spark.catalog.clearCache()
+    caplog.clear()
+    with caplog.at_level(logging.WARNING):
+        sampling._two_pass_offsets(df, ["grp"])
+    assert len(sampling._OFFSETS_PERSISTED) == 1
+    assert not any("release_offsets_materializations" in r.message
+                   for r in caplog.records)
+    assert sampling.release_offsets_materializations(blocking=True) == 1
+
+
 def test_d14_greedy_predicate_matches_reference_and_cuts(spark, tmp_path):
     """Property: for random tiny corpora, (a) the Spark bucket-min
     admission equals a serial greedy reference computed from the band

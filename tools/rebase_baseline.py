@@ -53,7 +53,7 @@ def main() -> None:
 
     host_cal, host_cal_shuffle = bench.measure_anchors(spark)
     bench.warm_queries(spark, registry, bench.R01_SUBSET, sf_dir)
-    times, spreads, _ = bench.time_queries(
+    times, spreads, _, _ = bench.time_queries(
         spark, registry, bench.R01_SUBSET, sf_dir
     )
     subset_wall = round(sum(times.values()), 3)
