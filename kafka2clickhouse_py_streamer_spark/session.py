@@ -131,9 +131,9 @@ def get_spark(
         # SCALE.md, "Codegen cache thrash".
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         # JVM launch option, so it only reaches a JVM this builder
-        # starts. In the first corpus pass about half the process CPU
-        # was C2 compile time, spent on lukewarm Spark internals; the
-        # raised thresholds keep those in C1 (SCALE.md, "JIT warm-up
+        # starts. In the first warm corpus pass about half the process
+        # CPU was JIT time, mostly C2 work on lukewarm Spark internals;
+        # the raised thresholds keep those in C1 (SCALE.md, "JIT warm-up
         # tail"). Spark prepends defaultJavaOptions to extraJavaOptions,
         # so a user's JFR or GC-log flags there keep these.
         .config("spark.driver.defaultJavaOptions", _DRIVER_JAVA_OPTIONS)
